@@ -1,18 +1,18 @@
 #!/usr/bin/env python
-"""Round-16 (r15 verdict item 7): independent timing record for the
-streaming maintenance paths (the append_* builders the
-stream_*_updates foreachBatch sinks call per micro-batch).
+"""Independent timing record for the streaming maintenance paths (the
+append_* builders the stream_*_updates foreachBatch sinks call per
+micro-batch).
 
 For each persisted layout: build the layout over a BASE slice of the
 corpus (untimed — the build is the ensure_* path, measured elsewhere),
 then time THREE sequential appends of distinct tail batches. O(batch)
 behavior shows as per-append seconds that track batch size, not corpus
-size; the r13/r14 contract. Runs in a PRIVATE warehouse + scratch
-corpus dirs so the repo-root layouts the bench serves are untouched.
+size. Runs in a PRIVATE warehouse + scratch corpus dirs so the
+repo-root layouts the bench serves are untouched.
 
 Usage:
-  python scripts/r16_append_record.py /root/testdata/sf0.1 all > docs/APPEND_MAINT_r16_sf01.json
-  python scripts/r16_append_record.py /root/repo/.scratch/sf10 docs3 > docs/APPEND_MAINT_r16_sf10.json
+  python scripts/append_record.py <sf0.1 dir> all > docs/APPEND_MAINT_r16_sf01.json
+  python scripts/append_record.py .scratch/sf10 docs3 > docs/APPEND_MAINT_r16_sf10.json
 ("docs3" = the minhash/semantic/postings subset the verdict asked for
 at sf10.)
 """
@@ -44,13 +44,13 @@ def main() -> int:
     from stream_processor_spark.session import get_spark
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    scratch = os.path.join(ROOT, ".scratch", f"r16_append_{tag}")
+    scratch = os.path.join(ROOT, ".scratch", f"append_{tag}")
     shutil.rmtree(scratch, ignore_errors=True)
     base_dir = os.path.join(scratch, "base")
     os.makedirs(base_dir, exist_ok=True)
 
     spark = get_spark(
-        "r16-append-record",
+        "append-record",
         extra_confs={
             "spark.sql.warehouse.dir": os.path.join(scratch, "wh"),
             "spark.driver.extraJavaOptions":

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for every headline query into
-plans/r16/<name>_<tag>.txt plus a one-line plan-shape summary per query
+<out_dir>/<name>_<tag>.txt plus a one-line plan-shape summary per query
 (Exchange count, join strategies, Python-eval nodes, pushed filters) on
 stdout — the optimization round's before/after evidence.
 
-Usage: python scripts/r16_capture_plans.py <tag> [name1,name2,...]
+Usage: python scripts/capture_plans.py <out_dir> <tag> [name1,name2,...]
+       e.g. python scripts/capture_plans.py plans/r16 before
        tag is e.g. "before" or "after"; default query set = bench.HEADLINE.
 """
 
@@ -37,19 +38,22 @@ def plan_shape(plan: str) -> dict[str, object]:
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) not in (3, 4):
+        sys.exit(
+            "usage: python scripts/capture_plans.py <out_dir> <tag> [name1,name2,...]"
+        )
+    outdir, tag = sys.argv[1], sys.argv[2]
     import bench
 
     names = list(bench.HEADLINE)
-    if len(sys.argv) > 2:
-        names = [n for n in sys.argv[2].split(",") if n]
+    if len(sys.argv) > 3:
+        names = [n for n in sys.argv[3].split(",") if n]
 
     from stream_processor_spark.queries import REGISTRY
     from stream_processor_spark.session import get_spark
 
-    spark = get_spark("r16-capture-plans")
+    spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16")
     os.makedirs(outdir, exist_ok=True)
 
     for name in names:

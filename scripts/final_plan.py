@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Capture the FINAL adaptive plan (isFinalPlan=true, post-execution)
-for the named queries into plans/r15/<name>_<tag>.txt.
+for the named queries into <out_dir>/<name>_<tag>.txt.
 
 The static .explain("formatted") of an un-executed AQE query prints the
 *initial* plan — exchange reuse (ReusedExchange) is decided at runtime,
@@ -10,7 +10,8 @@ prints the same DataFrame's formatted plan, which by then carries
 isFinalPlan=true and the AQE-inserted ReusedExchange/AQEShuffleRead
 nodes.
 
-Usage: python scripts/r15_final_plan.py <tag> name1,name2,...
+Usage: python scripts/final_plan.py <out_dir> <tag> name1,name2,...
+  e.g. python scripts/final_plan.py plans/r16 after corpus_curate_e2e
 """
 
 from __future__ import annotations
@@ -25,8 +26,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = [n for n in sys.argv[2].split(",") if n]
+    if len(sys.argv) != 4:
+        sys.exit("usage: python scripts/final_plan.py <out_dir> <tag> name1,name2,...")
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    names = [n for n in sys.argv[3].split(",") if n]
 
     import json
     import urllib.request
@@ -34,11 +37,11 @@ def main() -> int:
     from stream_processor_spark.queries import REGISTRY
     from stream_processor_spark.session import get_spark
 
-    spark = get_spark("r15-final-plans", extra_confs={"spark.ui.enabled": "true"})
+    spark = get_spark("final-plans", extra_confs={"spark.ui.enabled": "true"})
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
-    os.makedirs("plans/r15", exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         spec = REGISTRY[name]
         df = spec.fn(spark, SF_DIR)
@@ -54,7 +57,7 @@ def main() -> int:
         execs = json.load(urllib.request.urlopen(url))
         last = max(execs, key=lambda e: e["id"])
         plan = last["planDescription"]
-        path = f"plans/r15/{name}_{tag}.txt"
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
         reused = len(re.findall(r"\bReusedExchange\b", plan))

@@ -110,8 +110,7 @@ is 1.8x)). The router resolves each to its fast twin when the layout
 exists — the correctness oracles still hash-check all six.
 
 Round 9 pinned the `tpch_q9_shape` scan floor with a same-day record
-(docs/SF10_Q9_FLOOR_r9.json, regenerate with
-`python scripts/q9_floor_record.py`): Spark's bare noop-sink scan of
+(docs/SF10_Q9_FLOOR_r9.json): Spark's bare noop-sink scan of
 exactly the query's input columns costs >= DuckDB's ENTIRE q9 locally,
 so no shuffle-era plan reaches <=2x and the bucketed twin is the
 production answer. The round-9 hint change (shuffle_hash on the

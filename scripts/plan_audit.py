@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Full-registry plan-shape audit (round 15): every `queries()` entry.
+"""Full-registry plan-shape audit: every `queries()` entry.
 
 For each of the 286 registry entries, build the DataFrame against the
 given sf_dir and record the static physical plan's shape: Exchange
@@ -7,14 +7,15 @@ count, join strategies, Python-eval nodes, Sorts, parquet scans,
 pushed-filter count, plus red flags (CartesianProduct,
 BatchEvalPython — the row-at-a-time Python path — and scans with no
 pushed filters where a filter exists in the plan). Writes a
-machine-readable record to docs/PLAN_AUDIT_r16.json and prints a
-summary of flagged entries.
+machine-readable record to out_json and prints a summary of flagged
+entries.
 
-This is the round's "every operator examined" checklist artifact: the
-headline 46 have hand-captured before/after plans under plans/r16/;
-this sweep pins the OTHER 240 entries' shapes on the same tree.
+This is the "every operator examined" checklist artifact: the headline
+46 get before/after plans from capture_plans.py and final_plan.py;
+this sweep pins every entry's shape on the same tree.
 
-Usage: python scripts/r16_plan_audit.py [sf_dir] [out_json]
+Usage: python scripts/plan_audit.py <sf_dir> <out_json>
+  e.g. python scripts/plan_audit.py "$SPARK_GRAFT_SF_DIR" docs/PLAN_AUDIT_r16.json
 """
 
 from __future__ import annotations
@@ -51,13 +52,14 @@ def plan_shape(plan: str) -> dict[str, int]:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out = sys.argv[2] if len(sys.argv) > 2 else "docs/PLAN_AUDIT_r16.json"
+    if len(sys.argv) != 3:
+        sys.exit("usage: python scripts/plan_audit.py <sf_dir> <out_json>")
+    sf_dir, out = sys.argv[1], sys.argv[2]
 
     from stream_processor_spark.queries import REGISTRY
     from stream_processor_spark.session import get_spark
 
-    spark = get_spark("r16-plan-audit")
+    spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     entries: dict[str, dict] = {}
     flagged: dict[str, list[str]] = {}

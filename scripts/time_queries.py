@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Best-of-N noop timing for named registry queries (round-15 A/B tool).
+"""Best-of-N noop timing for named registry queries (A/B tool).
 
-Usage: python scripts/r16_time.py name1,name2 [N] [sf_dir]
+Usage: python scripts/time_queries.py name1,name2 [N] [sf_dir]
 One warm (untimed) pass per query, then N timed noop materializations,
 queries interleaved round-robin so host noise hits all of them equally.
 """
@@ -24,7 +24,7 @@ def main() -> int:
     from stream_processor_spark.queries import REGISTRY
     from stream_processor_spark.session import get_spark
 
-    spark = get_spark("r16-time")
+    spark = get_spark("time-queries")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:  # warm: compile + footer reads, untimed
         REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format(

@@ -61,6 +61,26 @@ HELP = {
 GAUGES = {"consumer_lag"}
 
 
+class _Histogram:
+    """One step's duration histogram: cumulative counts per
+    ``DURATION_BUCKETS`` bound plus sum and count — fixed size however
+    many observations arrive, so a scrape costs O(buckets)."""
+
+    __slots__ = ("buckets", "sum", "count")
+
+    def __init__(self):
+        self.buckets = [0] * len(DURATION_BUCKETS)
+        self.sum = 0  # int start, as sum() uses: the same float result
+        self.count = 0
+
+    def observe(self, seconds: float) -> None:
+        for i, le in enumerate(DURATION_BUCKETS):
+            if seconds <= le:
+                self.buckets[i] += 1
+        self.sum += seconds
+        self.count += 1
+
+
 class PipelineMetrics:
     """Thread-safe label-aware counters using the reference metric names."""
 
@@ -79,8 +99,8 @@ class PipelineMetrics:
         # (name, extra-label items tuple) -> value
         self._counts: dict[tuple, float] = defaultdict(float)
         self._gauges: dict[tuple, float] = {}
-        # step label -> list of observed durations
-        self._durations: dict[str, list[float]] = defaultdict(list)
+        # step label -> duration histogram
+        self._durations: dict[str, _Histogram] = defaultdict(_Histogram)
 
     def inc(self, name: str, n: float = 1.0, **extra_labels: str) -> None:
         with self._lock:
@@ -93,16 +113,12 @@ class PipelineMetrics:
 
     def observe_duration(self, seconds: float, step: str = "total") -> None:
         with self._lock:
-            self._durations[step].append(seconds)
+            self._durations[step].observe(seconds)
 
-    def record_batch(
-        self, route_counts: dict[str, int], step_names: list[str] | int
-    ) -> None:
+    def record_batch(self, route_counts: dict[str, int], step_names: list[str]) -> None:
         """Update all counters from one routed micro-batch's route counts.
 
-        ``step_names`` is the ordered processor-name list; an int is
-        accepted for backward compatibility (loses the per-processor
-        split of processors_applied_total).
+        ``step_names`` is the chain's ordered processor-name list.
         """
         received = sum(route_counts.values())
         ok = route_counts.get("ok", 0)
@@ -114,9 +130,6 @@ class PipelineMetrics:
         self.inc("messages_dropped_total", dropped)
         self.inc("messages_dlq_total", dlq)
         self.inc("messages_error_total", errors)
-        if isinstance(step_names, int):
-            self.inc("processors_applied_total", ok * step_names)
-            return
         # exact per-processor counts (consumer.js:95 semantics): a record
         # failing at step j applied steps < j; ok/dropped applied all.
         # Route labels carry the processor NAME, not the step index, so a
@@ -152,12 +165,13 @@ class PipelineMetrics:
                 out.append((name, {**self.labels, **dict(extra)}, v))
             for (name, extra), v in sorted(self._gauges.items()):
                 out.append((name, {**self.labels, **dict(extra)}, v))
-            durations = {k: list(v) for k, v in self._durations.items()}
-        for step, obs in sorted(durations.items()):
+            durations = {
+                k: (list(h.buckets), h.sum, h.count)
+                for k, h in self._durations.items()
+            }
+        for step, (buckets, total, count) in sorted(durations.items()):
             labels = {**self.labels, "step": step}
-            acc = 0
-            for le in DURATION_BUCKETS:
-                acc = sum(1 for d in obs if d <= le)
+            for le, acc in zip(DURATION_BUCKETS, buckets):
                 out.append(
                     (
                         "message_processing_duration_seconds_bucket",
@@ -169,14 +183,14 @@ class PipelineMetrics:
                 (
                     "message_processing_duration_seconds_bucket",
                     {**labels, "le": "+Inf"},
-                    float(len(obs)),
+                    float(count),
                 )
             )
             out.append(
-                ("message_processing_duration_seconds_sum", labels, float(sum(obs)))
+                ("message_processing_duration_seconds_sum", labels, float(total))
             )
             out.append(
-                ("message_processing_duration_seconds_count", labels, float(len(obs)))
+                ("message_processing_duration_seconds_count", labels, float(count))
             )
         return out
 

@@ -352,8 +352,7 @@ def _window_hashes(t):
     """(doc_id, pos, gh) for every 10-token window: each token
     xxhash64'd once, each window hashing its 10 pre-hash values with
     ONE variadic xxhash64 call. Shared by the fused/unfused
-    member-recovery shapes and the A/B harness
-    (scripts/r15_dup_spans_ab.py).
+    member-recovery shapes (A/B on record in docs/DUP_SPANS_AB_r15.json).
 
     Round 15: the former `xxhash64(slice(th, i, 10))` allocated an
     array per window AND — because `th` was referenced through a

@@ -9,6 +9,8 @@ model-backed ops get rows-only checks.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -20,6 +22,8 @@ from stream_processor_spark.operators import multimodal as mm
 from stream_processor_spark.operators import similarity as sim
 from stream_processor_spark.operators import text as tx
 from stream_processor_spark.queries.base import register
+
+_log = logging.getLogger(__name__)
 
 # ------------------------------------------------------------- similarity ----
 
@@ -2109,14 +2113,20 @@ _PQR_PERSISTED: list = []
 
 def _pqr_drop_previous() -> None:
     """Unpersist the previous invocation's caches. A stale handle whose
-    SparkSession has since stopped must not break the new build
-    (multi-session tests/tools) — drop it silently."""
+    SparkSession has since stopped holds no cache and must not break the
+    new build (multi-session tests/tools), so it is dropped quietly. Any
+    other unpersist failure is logged: a surviving cache would let the
+    CacheManager serve the previous run's rows to this one."""
     while _PQR_PERSISTED:
         h = _PQR_PERSISTED.pop()
+        if h.sparkSession.sparkContext._jsc is None:  # session stopped
+            continue
         try:
             h.unpersist()
         except Exception:
-            pass
+            _log.warning(
+                "pq_residual: unpersist of a cached frame failed", exc_info=True
+            )
 
 
 def _pq_residual_frame(t, shortlist=_PQR_SHORTLIST):

@@ -295,10 +295,10 @@ def _sem_dropped(t, cand, assigned):
       (vec_id, va, vb) (`_sem_verify_batches`): same bit-exact
       arithmetic via `npkernel`, vectorized instead of the interpreted
       higher-order-function fold (guide §4.2 — the IVF serve precedent).
-    Alternatives falsified on record (scripts/r15_sem_ab.py +
-    OPTIMIZATION_r15.md): pre-joining a (cluster, embedding) side frame
-    2.5× slower at sf0.1; dropping the explicit repartition 3× slower
-    (AQE coalesces the verify to ~3 tasks)."""
+    Alternatives falsified on record (OPTIMIZATION_r15.md): pre-joining
+    a (cluster, embedding) side frame 2.5× slower at sf0.1; dropping the
+    explicit repartition 3× slower (AQE coalesces the verify to ~3
+    tasks)."""
     e = t.embeddings
     ca = assigned.select(
         F.col("vec_id").alias("id_a"), F.col("cluster_id").alias("cl_a")
@@ -818,7 +818,7 @@ def _bpe_batched_oracle(rounds: int, k: int, peels: int) -> str:
 _BPE_DRIVER_VOCAB_MAX = 2_000_000
 
 
-def _bpe_rounds_driver(rows, rounds, k, peels, on_round):
+def _bpe_rounds_driver(rows, rounds, k, peels):
     """The batched trainer's merge rounds in pure Python over the
     hydrated vocabulary — operation-for-operation the relational loop
     below (pair counts summing word freq per ADJACENT OCCURRENCE,
@@ -831,12 +831,9 @@ def _bpe_rounds_driver(rows, rounds, k, peels, on_round):
     31-word model; driver rounds are sub-millisecond there).
     tests/test_round15_ops.py pins driver==relational on a multi-round
     vocabulary."""
-    import time as _time
-
     vocab = [(r[0], r[1], int(r[2])) for r in rows]
     merges: list[tuple[int, str, int]] = []
-    for _rnd in range(1, rounds + 1):
-        _t0 = _time.perf_counter()
+    for _ in range(rounds):
         cnt: dict[str, int] = {}
         for _tok, s, freq in vocab:
             syms = s.split(" ")
@@ -880,18 +877,10 @@ def _bpe_rounds_driver(rows, rounds, k, peels, on_round):
         vocab = new_vocab
         for p, c, _r in sel:
             merges.append((len(merges) + 1, p.replace("_", ""), int(c)))
-        if on_round is not None:
-            on_round(_rnd, len(sel), _time.perf_counter() - _t0)
     return merges, vocab
 
 
-def _bpe_fit_batched(
-    t,
-    rounds: int | None = None,
-    k: int | None = None,
-    peels: int | None = None,
-    on_round=None,
-):
+def _bpe_fit_batched(t):
     """Batched trainer loop: returns (merge records, final vocab frame).
     Per round: one vocab-sized pair aggregate, a total-order rank
     (single-partition window — the pair table is vocabulary-sized, NOT
@@ -899,18 +888,11 @@ def _bpe_fit_batched(
     selection, a bounded collect (<= ``k`` rows), and ONE fused
     whole-stage-codegen replace chain; localCheckpoint caps lineage.
 
-    Defaults reproduce the registered `text_bpe_train_batched` entry
-    exactly; the saturation rehearsal (scripts/bpe_saturation_record.py,
-    VERDICT r9 #5) raises ``rounds`` to drive >=5k merges on a synthetic
-    wide-vocab corpus and passes ``on_round`` (a callback receiving
-    (round_idx, merges_this_round, seconds)) to record per-round yield
-    and wall-clock flatness."""
-    import time as _time
-
-    # None -> the module constants AT CALL TIME (tests monkeypatch them)
-    rounds = _BPE_BATCH_ROUNDS if rounds is None else rounds
-    k = _BPE_BATCH_K if k is None else k
-    peels = _BPE_PEELS if peels is None else peels
+    Round count, batch cap and peel depth are the module constants,
+    read at call time (tests monkeypatch them). Per-round yield and
+    wall-clock flatness at >=5k merges on a wide-vocab corpus are on
+    record in docs/BPE_SATURATION_r10.json."""
+    rounds, k, peels = _BPE_BATCH_ROUNDS, _BPE_BATCH_K, _BPE_PEELS
 
     d = t.documents
     toks = (
@@ -929,16 +911,13 @@ def _bpe_fit_batched(
     # one corpus aggregate stays distributed, the 16 merge rounds stop
     # paying ~5 scheduler round-trips each on a vocabulary-sized frame
     if vocab.count() <= _BPE_DRIVER_VOCAB_MAX:
-        d_merges, d_vocab = _bpe_rounds_driver(
-            vocab.collect(), rounds, k, peels, on_round
-        )
+        d_merges, d_vocab = _bpe_rounds_driver(vocab.collect(), rounds, k, peels)
         return d_merges, t._spark.createDataFrame(
             d_vocab, "tok string, s string, freq long"
         )
 
     merges: list[tuple[int, str, int]] = []
-    for _rnd in range(1, rounds + 1):
-        _t0 = _time.perf_counter()
+    for _ in range(rounds):
         syms = F.split(F.col("s"), " ")
         pairs = (
             vocab.filter(F.size(syms) >= 2)
@@ -1012,8 +991,6 @@ def _bpe_fit_batched(
             merges.append(
                 (len(merges) + 1, row["pair"].replace("_", ""), int(row["cnt"]))
             )
-        if on_round is not None:
-            on_round(_rnd, len(sel), _time.perf_counter() - _t0)
     return merges, vocab
 
 

@@ -143,7 +143,7 @@ def tpch_q9_shape(t):
     probes stream from full orders (was: build on 1.5M-per-sf orders)
     — warm sf10 2.37 -> 1.91 s. The residual >2x vs DuckDB is the
     scan floor, now PINNED with a same-day record
-    (docs/SF10_Q9_FLOOR_r9.json, scripts/q9_floor_record.py): the bare
+    (docs/SF10_Q9_FLOOR_r9.json): the bare
     JVM parquet scan of just this query's input columns costs ~1.9x
     DuckDB's ENTIRE query locally, so no shuffle-era plan can reach
     <=2x; the routed bucketed twin is the production answer. The profit

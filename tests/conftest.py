@@ -17,93 +17,33 @@ ensure_protobuf()
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
-# ---------------------------------------------------------------------------
-# Round-16 (r15 verdict item 2): the full suite grew to ~28 min on the
-# round-15 machine (798 tests), which overran the driver's verify budget
-# (VERIFY_r15 tests_ok:false was a timeout at ~98% with zero failures).
-# The multi-second end-to-end RECORDS below — streaming micro-batch runs,
-# txn-table crash matrices, index-append rebuild equalities, the BPE
-# 500-merge record, the full-registry cartesian sweep — are env-gated out
-# of the default `pytest tests/` path (NOT deleted: the builder's closing
-# gates run the full set with SPARK_GRAFT_FULL_TESTS=1, and any one test
-# can still be forced the same way). Selection = every test that took
-# >= 10 s in the round-16 profiling run (docs/PYTEST_r16_durations note),
-# EXCEPT the oracle-parity suite (the correctness gate mirrors the
-# driver's — never gated) and the pq_residual anti-gaming pins.
-# ---------------------------------------------------------------------------
-SLOW_E2E = {
-    "tests/test_aggmv.py::test_append_equals_full_rebuild",
-    "tests/test_ann_indexed.py::test_ivf_trained_indexed_matches_fit_per_query",
-    "tests/test_ann_indexed.py::test_pq_indexed_matches_fit_per_query",
-    "tests/test_ann_quality.py::test_ivfpq_compound_pruning_recall",
-    "tests/test_engine_extras.py::test_connected_components_unconverged_raises",
-    "tests/test_graceful_drain.py::test_sigterm_drains_cleanly_and_resume_has_no_duplicates",
-    "tests/test_index_maintenance.py::test_graph_append_capped_layout",
-    "tests/test_index_maintenance.py::test_graph_append_matches_frozen_model_derivation",
-    "tests/test_index_maintenance.py::test_graph_append_pool_memo_equals_cold_derivation",
-    "tests/test_index_maintenance.py::test_graph_append_reachability_and_recall_floor",
-    "tests/test_index_maintenance.py::test_graph_append_replay_and_compaction",
-    "tests/test_index_maintenance.py::test_minhash_replay_does_not_inflate_hot_bucket_guard",
-    "tests/test_index_maintenance.py::test_postings_append_equals_full_rebuild",
-    "tests/test_index_maintenance.py::test_sign_index_append_equals_full_rebuild",
-    "tests/test_index_maintenance.py::test_streamed_appends_visible_to_prior_reader_session",
-    "tests/test_index_maintenance.py::test_streaming_graph_updates_and_replay_healing",
-    "tests/test_index_maintenance.py::test_streaming_minhash_updates_and_replay_healing",
-    "tests/test_index_maintenance.py::test_streaming_semantic_updates_and_replay_healing",
-    "tests/test_index_maintenance.py::test_streaming_sign_updates_and_replay_healing",
-    "tests/test_joinmv.py::test_interleaved_appends_equal_full_join",
-    "tests/test_joinmv.py::test_streaming_txn_sink_end_to_end_and_restart",
-    "tests/test_joinmv.py::test_txn_sink_composition_crash_matrix",
-    "tests/test_llm_pipeline.py::test_bpe_batched_500_merges_oracled",
-    "tests/test_llm_pipeline.py::test_bpe_encode_compresses_and_bounds",
-    "tests/test_llm_pipeline.py::test_bpe_train_merge_table_properties",
-    "tests/test_llm_pipeline.py::test_semantic_dedup_survivor_set",
-    "tests/test_plans.py::test_no_cartesian_product_in_any_registered_query",
-    "tests/test_router.py::test_ensure_all_bootstraps_every_route_to_indexed",
-    "tests/test_streaming.py::test_apply_in_pandas_with_state_running_counts",
-    "tests/test_streaming.py::test_band_dedup_ttl_mode_runs_end_to_end",
-    "tests/test_streaming.py::test_dedup_within_watermark_bounds_state",
-    "tests/test_streaming.py::test_output_modes",
-    "tests/test_streaming.py::test_stateful_dedup_across_runs",
-    "tests/test_streaming.py::test_streaming_band_dedup_matches_batch_lsh",
-    "tests/test_streaming.py::test_streaming_split_invariance_fuzz",
-    "tests/test_streaming.py::test_transform_with_state_running_stats",
-    "tests/test_streaming_joins.py::test_stream_static_broadcast_join",
-    "tests/test_streaming_joins.py::test_stream_stream_join_with_watermarks",
-    "tests/test_streaming_joins.py::test_stream_stream_left_outer_emits_unmatched_after_watermark",
-    "tests/test_streaming_joins.py::test_streaming_dedup_against_static_corpus",
-    "tests/test_txn_table.py::test_append_read_roundtrip_and_time_travel",
-    "tests/test_txn_table.py::test_changes_feed_scans_only_changed_files",
-    "tests/test_txn_table.py::test_crash_mid_write_leaves_no_partial_reads",
-    "tests/test_txn_table.py::test_delete_where_keeps_null_condition_rows",
-    "tests/test_txn_table.py::test_delete_where_rewrites_only_touched_files",
-    "tests/test_txn_table.py::test_merge_concurrent_append_rederives_not_lost_update",
-    "tests/test_txn_table.py::test_merge_matches_registered_merge_upsert_query",
-    "tests/test_txn_table.py::test_merge_rewrites_only_touched_files",
-    "tests/test_txn_table.py::test_restore_is_metadata_only_and_time_travels",
-    "tests/test_txn_table.py::test_restore_replay_does_not_destroy_live_files",
-    "tests/test_txn_table.py::test_runner_txn_table_sink_replay_effectively_once",
-    "tests/test_txn_table.py::test_streaming_pipeline_into_txn_table_checkpoint_resume",
-    "tests/test_zonemap.py::test_append_extends_manifest_incrementally",
-    "tests/test_zonemap.py::test_foreign_append_invalidates_memo_snapshot",
-    "tests/test_zonemap.py::test_half_built_pair_is_rebuilt",
-    "tests/test_zonemap.py::test_point_lookup_prunes_and_matches",
-    "tests/test_zonemap.py::test_range_lookup_prunes_and_matches",
-    "tests/test_zonemap.py::test_reconcile_folds_unmanifested_files",
-    "tests/test_zonemap.py::test_zonemap_generalizes_to_any_table_key",
-}
+# Multi-second end-to-end records — streaming micro-batch runs, txn-table
+# crash matrices, index-append rebuild equalities, the BPE 500-merge
+# record, the full-registry cartesian sweep — carry `@pytest.mark.slow`
+# and are skipped in the default `pytest tests/` path (every test that
+# took >= 10 s in docs/PYTEST_r16_durations.txt, except the oracle-parity
+# suite and the pq_residual anti-gaming pins). SPARK_GRAFT_FULL_TESTS=1
+# (or true/yes) runs them; 0 or empty leaves them skipped.
+_TRUTHY = {"1", "true", "yes"}
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "slow: multi-second end-to-end record, skipped unless "
+        "SPARK_GRAFT_FULL_TESTS is true",
+    )
 
 
 def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS", "").strip().lower() in _TRUTHY:
         return
     skip = pytest.mark.skip(
         reason="slow e2e record; run with SPARK_GRAFT_FULL_TESTS=1 "
         "(the builder's closing gates do)"
     )
     for item in items:
-        base = item.nodeid.split("[")[0]
-        if base in SLOW_E2E:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)
 
 

@@ -38,6 +38,7 @@ def _fresh_mv(spark, tmp_path, base):
     return aggmv.ensure_agg_mv(spark, str(tmp_path), base)
 
 
+@pytest.mark.slow
 def test_append_equals_full_rebuild(spark, tmp_path, lineitem):
     base = lineitem.filter("l_orderkey % 4 = 0")
     name = _fresh_mv(spark, tmp_path, base)

@@ -32,6 +32,7 @@ def _rows(df, ndigits=12):
     return sorted(out)
 
 
+@pytest.mark.slow
 def test_ivf_trained_indexed_matches_fit_per_query(spark, sf_dir):
     got = _rows(REGISTRY["sim_ann_ivf_trained_indexed"].fn(spark, sf_dir))
     want = _rows(REGISTRY["sim_ann_ivf_trained"].fn(spark, sf_dir))
@@ -46,6 +47,7 @@ def test_ivf_trained_indexed_matches_fit_per_query(spark, sf_dir):
     assert len(m.group(1).split(",")) == 3  # nprobe
 
 
+@pytest.mark.slow
 def test_pq_indexed_matches_fit_per_query(spark, sf_dir):
     got = _rows(REGISTRY["sim_ann_pq_indexed"].fn(spark, sf_dir))
     want = _rows(REGISTRY["sim_ann_pq_trained"].fn(spark, sf_dir))

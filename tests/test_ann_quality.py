@@ -114,6 +114,7 @@ def test_ivf_not_worse_than_lsh(rankings):
     assert len(ivf & top10) >= len(lsh & top10)
 
 
+@pytest.mark.slow
 def test_ivfpq_compound_pruning_recall(spark, rankings):
     """The combined IVF+PQ index compounds two prunings (nprobe=3 of 10
     list partitions x 8-id ADC shortlist). Round 8 switched the

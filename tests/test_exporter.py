@@ -7,10 +7,13 @@ their label sets over HTTP after a routed batch, plus the /health and
 
 from __future__ import annotations
 
+import random
+import sys
+import types
 import urllib.request
 
 from stream_processor_spark.pipeline.exporter import CONTENT_TYPE, MetricsServer, render
-from stream_processor_spark.pipeline.metrics import PipelineMetrics
+from stream_processor_spark.pipeline.metrics import DURATION_BUCKETS, PipelineMetrics
 
 REFERENCE_METRICS = {
     # name -> required label keys (src/metrics.js:5-52)
@@ -85,6 +88,56 @@ def test_render_names_and_labels_parity():
     inf = [v for labels, v in hist if labels["le"] == "+Inf"]
     count = parsed["message_processing_duration_seconds_count"][0][1]
     assert inf == [count] == [1.0]
+
+
+def _list_histogram_samples(labels, obs_by_step):
+    """The exposition an unbounded per-step list of observations yields:
+    rescan every observation for every bucket bound."""
+    out = []
+    for step, obs in sorted(obs_by_step.items()):
+        lab = {**labels, "step": step}
+        name = "message_processing_duration_seconds"
+        for le in DURATION_BUCKETS:
+            le_s = str(int(le)) if float(le).is_integer() else repr(le)
+            n = sum(1 for d in obs if d <= le)
+            out.append((f"{name}_bucket", {**lab, "le": le_s}, float(n)))
+        out.append((f"{name}_bucket", {**lab, "le": "+Inf"}, float(len(obs))))
+        out.append((f"{name}_sum", lab, float(sum(obs))))
+        out.append((f"{name}_count", lab, float(len(obs))))
+    return out
+
+
+def _histogram_state_bytes(m: PipelineMetrics) -> int:
+    size = sys.getsizeof(m._durations)
+    for h in m._durations.values():
+        size += sys.getsizeof(h) + sys.getsizeof(h.buckets)
+        size += sum(sys.getsizeof(v) for v in (*h.buckets, h.sum, h.count))
+    return size
+
+
+def test_duration_histogram_bounded_and_exposition_unchanged():
+    rng = random.Random(7)
+    # spans every bucket, including values exactly on a bound and past 10 s
+    obs = {
+        "total": [rng.uniform(0, 12) ** 2 / 12 for _ in range(10_000)]
+        + list(DURATION_BUCKETS),
+        "addBatch": [rng.expovariate(20) for _ in range(500)],
+    }
+    m = PipelineMetrics("1", pod_name="pod-a")
+    for d in obs["total"][:1000]:
+        m.observe_duration(d)
+    bytes_at_1k = _histogram_state_bytes(m)
+    for d in obs["total"][1000:]:
+        m.observe_duration(d)
+    assert _histogram_state_bytes(m) == bytes_at_1k
+    for d in obs["addBatch"]:
+        m.observe_duration(d, step="addBatch")
+    assert all(len(h.buckets) == len(DURATION_BUCKETS) for h in m._durations.values())
+
+    reference = types.SimpleNamespace(
+        samples=lambda: _list_histogram_samples(m.labels, obs)
+    )
+    assert render([m]) == render([reference])
 
 
 def test_http_scrape_and_health():

@@ -34,6 +34,7 @@ def _docs_dirs(tmp_path, spark):
     return str(a_dir), str(full_dir)
 
 
+@pytest.mark.slow
 def test_postings_append_equals_full_rebuild(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -602,6 +603,7 @@ def test_ivf_build_writes_one_file_per_list(spark, tmp_path):
             assert len(files) == 1, (table, part, files)
 
 
+@pytest.mark.slow
 def test_minhash_replay_does_not_inflate_hot_bucket_guard(spark, tmp_path):
     """Round-10 ADVICE: the hot-bucket guard must size buckets on
     DISTINCT docs when healing replays — raw band-row counts let a
@@ -652,6 +654,7 @@ def test_minhash_replay_does_not_inflate_hot_bucket_guard(spark, tmp_path):
     assert pairs(bands_a, hset_a) == want
 
 
+@pytest.mark.slow
 def test_sign_index_append_equals_full_rebuild(spark, tmp_path):
     """Round-10: append(B) onto a sign-signature layout built from A
     must equal the layout built from A∪B EXACTLY (per-row pure packing,
@@ -827,6 +830,7 @@ def test_streaming_ivf_compact_every(spark, tmp_path):
     assert len(got) == 5 and got[0].vec_id == 3
 
 
+@pytest.mark.slow
 def test_streaming_minhash_updates_and_replay_healing(spark, tmp_path):
     """Round-12 (verdict item 5): the `stream_ivf_updates` discipline on
     the MinHash layout — documents arrive as a file stream, each batch
@@ -900,6 +904,7 @@ def test_streaming_minhash_updates_and_replay_healing(spark, tmp_path):
     assert pairs(bands_a, hset_a, dedup_replays=False) == want
 
 
+@pytest.mark.slow
 def test_streaming_sign_updates_and_replay_healing(spark, tmp_path):
     """Round-12 (verdict item 5): streaming maintenance of the sign
     layout — streamed append ≡ full rebuild byte-for-byte, replay
@@ -970,6 +975,7 @@ def test_streaming_sign_updates_and_replay_healing(spark, tmp_path):
     assert serve() == baseline
 
 
+@pytest.mark.slow
 def test_streaming_semantic_updates_and_replay_healing(spark, tmp_path):
     """Round-12: streaming maintenance of the semantic-dedup layout —
     streamed micro-batches ≡ the same rows appended directly (batch
@@ -1102,6 +1108,7 @@ def _expected_graph_append_rows(spark, edges_before, new_rows, bits, m):
     return expect
 
 
+@pytest.mark.slow
 def test_graph_append_matches_frozen_model_derivation(spark, tmp_path):
     """Round-13 (verdict lead item): append(B) onto the graph layout is
     the documented PURE FUNCTION of (layout's dst view, batch) — new
@@ -1136,6 +1143,7 @@ def test_graph_append_matches_frozen_model_derivation(spark, tmp_path):
             assert int(r["src_b"]) == b
 
 
+@pytest.mark.slow
 def test_graph_append_reachability_and_recall_floor(spark, tmp_path):
     """Appended vectors must be REACHABLE (their own embedding as the
     query returns them at rank 1 — the bidirectional-connect contract)
@@ -1180,6 +1188,7 @@ def test_graph_append_reachability_and_recall_floor(spark, tmp_path):
     assert sum(recalls) / len(recalls) >= 0.7
 
 
+@pytest.mark.slow
 def test_graph_append_replay_and_compaction(spark, tmp_path):
     """foreachBatch retry contract: a replayed append re-inserts
     byte-identical rows (the frozen pool is UNCHANGED by the first
@@ -1246,6 +1255,7 @@ def test_graph_append_replay_and_compaction(spark, tmp_path):
     )
 
 
+@pytest.mark.slow
 def test_streaming_graph_updates_and_replay_healing(spark, tmp_path):
     """Round-13: streaming maintenance of the graph layout — streamed
     micro-batches ≡ the same batches appended directly in order
@@ -1299,6 +1309,7 @@ def test_streaming_graph_updates_and_replay_healing(spark, tmp_path):
     assert int(top[0][0]) == 470
 
 
+@pytest.mark.slow
 def test_graph_append_pool_memo_equals_cold_derivation(spark, tmp_path):
     """The incrementally-maintained candidate pool (steady-state
     appends pay no index scan) must be INVISIBLE: two sequential
@@ -1333,6 +1344,7 @@ def test_graph_append_pool_memo_equals_cold_derivation(spark, tmp_path):
     assert run(False) == run(True)
 
 
+@pytest.mark.slow
 def test_streamed_appends_visible_to_prior_reader_session(spark, tmp_path):
     """Round-13 regression (found via the graph path, latent in EVERY
     append): foreachBatch writes run through the micro-batch CLONE
@@ -1396,6 +1408,7 @@ def test_streamed_appends_visible_to_prior_reader_session(spark, tmp_path):
     assert post_count > pre  # new docs scored by the prior serving session
 
 
+@pytest.mark.slow
 def test_graph_append_capped_layout(spark, tmp_path):
     """The PRODUCTION append profile (per-bucket candidate cap): warm
     memo ≡ cold derivation under the cap, every appended out-edge's dst

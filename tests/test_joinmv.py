@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stream_processor_spark.catalog import Tables
@@ -29,6 +30,7 @@ def _fresh(spark, sf_dir):
     return joinmv.init_join_mv(spark, sf_dir)
 
 
+@pytest.mark.slow
 def test_interleaved_appends_equal_full_join(spark, sf_dir):
     t = Tables(spark, sf_dir)
     names = _fresh(spark, sf_dir)
@@ -175,6 +177,7 @@ def test_uncommitted_acc_partition_never_leaks_into_other_side(spark, sf_dir):
     assert _sorted_rows(got) == _sorted_rows(expect)  # exactly once
 
 
+@pytest.mark.slow
 def test_txn_sink_composition_crash_matrix(spark, sf_dir, tmp_path):
     """Round-8 VERDICT item: IVM maintenance composed with the
     TxnTable exactly-once sink converges from every crash window —
@@ -228,6 +231,7 @@ def test_txn_sink_composition_crash_matrix(spark, sf_dir, tmp_path):
     assert _sorted_rows(table.read()) == expect
 
 
+@pytest.mark.slow
 def test_streaming_txn_sink_end_to_end_and_restart(spark, sf_dir, tmp_path):
     """The composed streaming path (round-8): left inserts stream
     through foreachBatch into BOTH transactional layers; after the run

@@ -56,6 +56,7 @@ def test_pack_spans_are_contiguous(pack):
     assert bad == 0
 
 
+@pytest.mark.slow
 def test_semantic_dedup_survivor_set(spark, sf_dir):
     """Survivors are a subset of the corpus; vec_id 0 (the lowest id)
     always survives; every drop is justified by a surviving or dropped
@@ -149,6 +150,7 @@ def test_boilerplate_pct_bounds(spark, sf_dir):
     assert bad == 0
 
 
+@pytest.mark.slow
 def test_bpe_train_merge_table_properties(spark, sf_dir):
     """Round-8 full BPE trainer: 50 merges, counts non-increasing is NOT
     required (later merges can create new frequent pairs), but every
@@ -165,6 +167,7 @@ def test_bpe_train_merge_table_properties(spark, sf_dir):
         assert r["cnt"] >= 1
 
 
+@pytest.mark.slow
 def test_bpe_encode_compresses_and_bounds(spark, sf_dir):
     """Encoding under the trained merges: every document's BPE token
     count is at least its word count (pieces >= 1 per word) and at most
@@ -262,6 +265,7 @@ def test_bpe_merge_anchored_prefix_collision(spark):
     assert final == {w: " ".join(s) for w, s in vocab_py.items()}
 
 
+@pytest.mark.slow
 def test_bpe_batched_500_merges_oracled(spark):
     """Round-9 VERDICT #3 evidence: the batched trainer reaches >=500
     hash-oracled merges when the corpus vocabulary supports them. The

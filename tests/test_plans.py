@@ -8,6 +8,8 @@ aggregation before the shuffle, column pruning.
 
 from __future__ import annotations
 
+import pytest
+
 from stream_processor_spark.queries import REGISTRY
 
 
@@ -224,6 +226,7 @@ def test_salted_join_carries_salt_through_join_key(spark, sf_dir):
     assert "__salt" in plan
 
 
+@pytest.mark.slow
 def test_no_cartesian_product_in_any_registered_query(spark, sf_dir):
     """Global scale-killer net over EVERY registered query's physical
     plan, one pass:

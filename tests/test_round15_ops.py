@@ -425,3 +425,36 @@ def test_pq_residual_slim_cache_lazy_and_fresh_per_invocation(spark):
     sc.setJobGroup(None, None)
     assert rows2 == rows
     assert exec2_jobs * 2 > exec_jobs, (exec_jobs, exec2_jobs)
+
+
+def test_pqr_drop_previous_logs_unexpected_unpersist_failure(monkeypatch, caplog):
+    """A handle from a stopped session is dropped quietly; any other
+    unpersist failure is logged, since the surviving cache could serve
+    the previous run's rows to the next invocation."""
+    import logging
+    from types import SimpleNamespace
+
+    from stream_processor_spark.queries import llm_data as ld
+
+    class _Handle:
+        def __init__(self, live: bool, fails: bool):
+            jsc = object() if live else None
+            self.sparkSession = SimpleNamespace(
+                sparkContext=SimpleNamespace(_jsc=jsc)
+            )
+            self.fails = fails
+            self.unpersisted = False
+
+        def unpersist(self):
+            if self.fails:
+                raise RuntimeError("unpersist boom")
+            self.unpersisted = True
+
+    stopped, failing, ok = _Handle(False, True), _Handle(True, True), _Handle(True, False)
+    monkeypatch.setattr(ld, "_PQR_PERSISTED", [stopped, failing, ok])
+    with caplog.at_level(logging.WARNING, logger=ld.__name__):
+        ld._pqr_drop_previous()
+    assert ld._PQR_PERSISTED == []
+    assert ok.unpersisted
+    assert len(caplog.records) == 1
+    assert "unpersist boom" in caplog.text

@@ -116,6 +116,7 @@ def test_semantic_dedup_route_flips_and_matches(spark, routed_dir):
     assert _rows(r.query("semantic_dedup")) == before
 
 
+@pytest.mark.slow
 def test_ensure_all_bootstraps_every_route_to_indexed(spark, routed_dir):
     """Round-9 layout bootstrap: one `ensure_all` call builds every
     accelerating layout, after which EVERY route resolves indexed — the

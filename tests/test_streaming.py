@@ -135,6 +135,7 @@ def test_watermark_drops_late_data_across_runs(spark, tmp_path):
     assert late_emissions == []  # late row did not reopen the closed window
 
 
+@pytest.mark.slow
 def test_stateful_dedup_across_runs(spark, tmp_path):
     """dropDuplicates state persists in the checkpoint: a duplicate id
     arriving in a later micro-batch run is suppressed."""
@@ -175,6 +176,7 @@ def test_stateful_dedup_across_runs(spark, tmp_path):
     assert sorted(out) == [3]  # duplicate event_id=2 suppressed by state
 
 
+@pytest.mark.slow
 def test_dedup_within_watermark_bounds_state(spark, tmp_path):
     """dropDuplicatesWithinWatermark: duplicates are suppressed only
     within the watermark horizon, so state is BOUNDED (keys expire) —
@@ -230,6 +232,7 @@ def test_dedup_within_watermark_bounds_state(spark, tmp_path):
 # ------------------------------------------------------- arbitrary state ----
 
 
+@pytest.mark.slow
 def test_apply_in_pandas_with_state_running_counts(spark, tmp_path):
     from stream_processor_spark.streaming.stateful import running_counts
 
@@ -258,6 +261,7 @@ def test_apply_in_pandas_with_state_running_counts(spark, tmp_path):
 # ------------------------------------------------------------ output modes ----
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("mode,expect_cumulative", [("update", False), ("complete", True)])
 def test_output_modes(spark, tmp_path, mode, expect_cumulative):
     """update emits changed groups only; complete re-emits all groups."""
@@ -450,6 +454,7 @@ def test_streaming_framed_avro_wire_roundtrip(spark, tmp_path):
     assert None in by_key and "x" not in by_key
 
 
+@pytest.mark.slow
 def test_transform_with_state_running_stats(spark, tmp_path):
     """Spark 4 transformWithStateInPandas (typed StatefulProcessor with a
     named ValueState): per-key running (count, exact cents sum) persists
@@ -575,6 +580,7 @@ def test_apply_in_pandas_with_state_zscore_alerts(spark, tmp_path):
     assert ("a", 7, 105) not in keys
 
 
+@pytest.mark.slow
 def test_streaming_band_dedup_matches_batch_lsh(spark, sf_dir, tmp_path):
     """Streaming MinHash-LSH dedup == the batch operator: stream 120
     real documents in two micro-batch rounds (state surviving the
@@ -633,6 +639,7 @@ def test_streaming_band_dedup_matches_batch_lsh(spark, sf_dir, tmp_path):
     assert len(expected) > 0  # non-trivial: the slice has near-dups
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_streaming_split_invariance_fuzz(spark, sf_dir, tmp_path, seed):
     """Micro-batch-split invariance, fuzzed on real data: stream the
@@ -840,6 +847,7 @@ def test_band_dedup_overcap_duplicate_delivery_no_self_pair():
     assert [(r.doc_a, r.doc_b) for r in out[0].itertuples()] == [(2, 3)]
 
 
+@pytest.mark.slow
 def test_band_dedup_ttl_mode_runs_end_to_end(spark, sf_dir, tmp_path):
     """TTL mode through the real ProcessingTimeTimeout plumbing: two
     near-dup docs in one run still pair (TTL far above the run time)."""

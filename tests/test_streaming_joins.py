@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -45,6 +46,7 @@ def _t(minute: int) -> dt.datetime:
     return dt.datetime(2024, 3, 1, 12, 0) + dt.timedelta(minutes=minute)
 
 
+@pytest.mark.slow
 def test_stream_static_broadcast_join(spark, tmp_path):
     """Streaming events enriched against a static dim via broadcast."""
     broker = FileBroker(str(tmp_path / "broker"))
@@ -76,6 +78,7 @@ def test_stream_static_broadcast_join(spark, tmp_path):
     assert sorted(out) == [(1, "gold"), (2, "silver"), (3, None)]
 
 
+@pytest.mark.slow
 def test_stream_stream_join_with_watermarks(spark, tmp_path):
     """Inner stream-stream join: clicks ⋈ buys within 10 minutes."""
     broker = FileBroker(str(tmp_path / "broker"))
@@ -120,6 +123,7 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
     assert out == [(1, 100, 9.5)]
 
 
+@pytest.mark.slow
 def test_stream_stream_left_outer_emits_unmatched_after_watermark(spark, tmp_path):
     """Left-outer stream-stream join: unmatched left rows emit with NULL
     right side only after the watermark passes the join window."""
@@ -178,6 +182,7 @@ def test_stream_stream_left_outer_emits_unmatched_after_watermark(spark, tmp_pat
     assert (2, None, None) in out
 
 
+@pytest.mark.slow
 def test_streaming_dedup_against_static_corpus(spark, tmp_path):
     """Incremental corpus ingestion: a stream of documents is deduped
     against a STATIC historical fingerprint set with a broadcast

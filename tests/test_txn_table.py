@@ -23,6 +23,7 @@ def _df(spark, rows, schema="k long, v string"):
     return spark.createDataFrame(rows, schema)
 
 
+@pytest.mark.slow
 def test_append_read_roundtrip_and_time_travel(spark, tmp_path):
     t = TxnTable(spark, str(tmp_path / "t"))
     v1 = t.append(_df(spark, [(1, "a"), (2, "b")]))
@@ -41,6 +42,7 @@ def test_overwrite_replaces_snapshot(spark, tmp_path):
     assert [r.k for r in t.read(version=0).collect()] == [1]
 
 
+@pytest.mark.slow
 def test_crash_mid_write_leaves_no_partial_reads(spark, tmp_path):
     """A writer that stages data files but dies before the manifest
     rename must be invisible: the reader resolves the previous snapshot
@@ -113,6 +115,7 @@ def test_try_commit_refuses_existing_version(spark, tmp_path):
     )
 
 
+@pytest.mark.slow
 def test_merge_matches_registered_merge_upsert_query(spark, sf_dir):
     """MERGE against the table == the registered merge_upsert query
     (full-outer + COALESCE, llm_extra.py): load customer as the base
@@ -153,6 +156,7 @@ def test_merge_matches_registered_merge_upsert_query(spark, sf_dir):
     assert got == want
 
 
+@pytest.mark.slow
 def test_runner_txn_table_sink_replay_effectively_once(spark, tmp_path):
     """Sink('txn_table') through the runner: replaying a micro-batch
     (same batch_id — the foreachBatch retry case) commits once; a new
@@ -213,6 +217,7 @@ def test_read_empty_table_raises(spark, tmp_path):
         TxnTable(spark, str(tmp_path / "t")).read()
 
 
+@pytest.mark.slow
 def test_streaming_pipeline_into_txn_table_checkpoint_resume(spark, tmp_path):
     """Full streaming path: run_streaming → foreachBatch →
     Sink('txn_table'), with a checkpointed resume. Batch ids come from
@@ -296,6 +301,7 @@ def test_vacuum_grace_protects_live_writer(spark, tmp_path):
     assert sorted(r.k for r in t.read().collect()) == [1, 2]
 
 
+@pytest.mark.slow
 def test_merge_rewrites_only_touched_files(spark, tmp_path):
     """Round-7 file-pruned copy-on-write: a merge touching keys in one
     data file rewrites that file only — every other base file appears
@@ -334,6 +340,7 @@ def test_merge_rewrites_only_touched_files(spark, tmp_path):
     assert touched[0] not in after["files"]
 
 
+@pytest.mark.slow
 def test_merge_concurrent_append_rederives_not_lost_update(spark, tmp_path):
     """Round-7 ADVICE (medium): a merge losing the commit race to a
     concurrent append must NOT retry with its stale staged files (that
@@ -376,6 +383,7 @@ def test_merge_concurrent_append_rederives_not_lost_update(spark, tmp_path):
         t.fs.delete(f)
 
 
+@pytest.mark.slow
 def test_delete_where_rewrites_only_touched_files(spark, tmp_path):
     """Round-7 delete_where: file-pruned copy-on-write erasure —
     matching rows vanish, files without matches carry by path, time
@@ -448,6 +456,7 @@ def test_delete_where_concurrent_append_rederives(spark, tmp_path):
     assert rows == [(2, "b"), (99, "concurrent")]
 
 
+@pytest.mark.slow
 def test_changes_feed_scans_only_changed_files(spark, tmp_path):
     """Round-7 CDC read: the change feed between versions comes from
     manifest file-set diffs — carried files are never scanned, rows
@@ -476,6 +485,7 @@ def test_changes_feed_scans_only_changed_files(spark, tmp_path):
     ]
 
 
+@pytest.mark.slow
 def test_restore_is_metadata_only_and_time_travels(spark, tmp_path):
     t = TxnTable(spark, str(tmp_path / "t"))
     t.append(_df(spark, [(1, "a"), (2, "b")]))
@@ -493,6 +503,7 @@ def test_restore_is_metadata_only_and_time_travels(spark, tmp_path):
     assert t.vacuum(grace_ms=0) == 0
 
 
+@pytest.mark.slow
 def test_restore_replay_does_not_destroy_live_files(spark, tmp_path):
     """Round-7 ADVICE (high): an at-least-once redelivery of
     restore(v, txn_id) must be a pure no-op. The old code routed the
@@ -527,6 +538,7 @@ def test_restore_replay_does_not_destroy_live_files(spark, tmp_path):
     assert sorted(r.k for r in t.read().collect()) == [1, 2, 3]
 
 
+@pytest.mark.slow
 def test_delete_where_keeps_null_condition_rows(spark, tmp_path):
     """Round-7 ADVICE (medium): rows where the predicate evaluates to
     NULL are NOT deleted — only strictly-TRUE rows are. The old ~cond

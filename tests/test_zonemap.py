@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stream_processor_spark.catalog import Tables
@@ -21,6 +22,7 @@ def test_manifest_covers_table_exactly(spark, sf_dir):
     assert len(rows) > 1  # pruning is meaningful only with multiple files
 
 
+@pytest.mark.slow
 def test_point_lookup_prunes_and_matches(spark, sf_dir):
     data_name, map_name = zm.ensure_zonemap(spark, sf_dir)
     keys = [1, 7, 103]
@@ -40,6 +42,7 @@ def test_point_lookup_prunes_and_matches(spark, sf_dir):
     )
 
 
+@pytest.mark.slow
 def test_range_lookup_prunes_and_matches(spark, sf_dir):
     _, map_name = zm.ensure_zonemap(spark, sf_dir)
     lo, hi = 10, 29
@@ -61,6 +64,7 @@ def test_lookup_beyond_every_zone_reads_nothing(spark, sf_dir):
     assert got.count() == 0
 
 
+@pytest.mark.slow
 def test_half_built_pair_is_rebuilt(spark, sf_dir):
     data_name, map_name = zm.ensure_zonemap(spark, sf_dir)
     # crash window: manifest lost after the data write (ensure_postings
@@ -72,6 +76,7 @@ def test_half_built_pair_is_rebuilt(spark, sf_dir):
     assert zm.lookup_by_keys(spark, sf_dir, [1]).count() == 1
 
 
+@pytest.mark.slow
 def test_zonemap_generalizes_to_any_table_key(spark, sf_dir):
     """The layout works for any catalog table/key pair — embeddings by
     vec_id here — with its own deterministic table names."""
@@ -86,6 +91,7 @@ def test_zonemap_generalizes_to_any_table_key(spark, sf_dir):
     assert len(got.inputFiles()) < len(zm.manifest_rows(spark, m_emb))
 
 
+@pytest.mark.slow
 def test_append_extends_manifest_incrementally(spark, sf_dir):
     """Appends scan only the NEW files for stats (O(batch) maintenance),
     lookups see appended rows immediately, and recluster restores
@@ -134,6 +140,7 @@ def test_append_extends_manifest_incrementally(spark, sf_dir):
     )
 
 
+@pytest.mark.slow
 def test_reconcile_folds_unmanifested_files(spark, sf_dir):
     """Round-7 ADVICE: a crash in append_zonemap between the data-table
     append and the manifest extend leaves committed files invisible to
@@ -188,6 +195,7 @@ def test_reconcile_rebuilds_on_dead_manifest_paths(spark, sf_dir):
     ) == spark.table(d_name).count()
 
 
+@pytest.mark.slow
 def test_foreign_append_invalidates_memo_snapshot(spark, sf_dir):
     """Round-10 ADVICE: the reconcile memo is keyed by a DATA-directory
     snapshot, so appends from ANOTHER process sharing the warehouse
