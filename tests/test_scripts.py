@@ -1,12 +1,16 @@
-"""Static guard for scripts/: every tool compiles, and every import it
-takes from this repository (``stream_processor_spark``, ``scripts``,
-``tests``) names a module and an attribute that exist. Nothing is
-executed and no Spark session starts, so a kept tool that still imports
-a deleted or renamed one fails here rather than at its next run."""
+"""Guard for scripts/: every tool compiles, and every import it takes from
+this repository (a top-level module such as ``bench``, or a package such
+as ``stream_processor_spark``, ``scripts`` or ``tests``) names a module
+and an attribute that exist. The tools themselves are not run; only the
+modules they import are imported, which starts no Spark session. A kept
+tool that still imports a deleted or renamed one fails here rather than
+at its next run."""
 
 from __future__ import annotations
 
 import ast
+import importlib
+import importlib.util
 import os
 
 import pytest
@@ -14,48 +18,20 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPTS_DIR = os.path.join(REPO, "scripts")
 SCRIPTS = sorted(f for f in os.listdir(SCRIPTS_DIR) if f.endswith(".py"))
-LOCAL_ROOTS = {"stream_processor_spark", "scripts", "tests"}
-
-
-def _module_path(module: str) -> str | None:
-    """The file (or namespace-package directory) backing ``module``."""
-    base = os.path.join(REPO, *module.split("."))
-    for path in (base + ".py", os.path.join(base, "__init__.py"), base):
-        if os.path.exists(path):
-            return path
-    return None
-
-
-def _bound_names(path: str) -> set[str]:
-    """Names bound at a module's top level, including inside top-level
-    if/try/with/for blocks (e.g. guarded optional imports)."""
-    if os.path.isdir(path):  # namespace package: submodules only
-        return set()
-    with open(path) as fh:
-        tree = ast.parse(fh.read(), path)
-    names: set[str] = set()
-
-    def visit(stmts):
-        for node in stmts:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                names.add(node.name)
-            elif isinstance(node, (ast.Import, ast.ImportFrom)):
-                names.update((a.asname or a.name).split(".")[0] for a in node.names)
-            elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
-                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-                for target in targets:
-                    names.update(
-                        n.id for n in ast.walk(target) if isinstance(n, ast.Name)
-                    )
-            elif isinstance(node, (ast.If, ast.Try, ast.With, ast.For, ast.While)):
-                visit(getattr(node, "body", []))
-                visit(getattr(node, "orelse", []))
-                visit(getattr(node, "finalbody", []))
-                for handler in getattr(node, "handlers", []):
-                    visit(handler.body)
-
-    visit(tree.body)
-    return names
+# Every name importable from the repository root: top-level modules and
+# the directories holding Python files (regular or namespace packages).
+LOCAL_ROOTS = {
+    entry[:-3] if entry.endswith(".py") else entry
+    for entry in os.listdir(REPO)
+    if not entry.startswith(".")
+    and (
+        entry.endswith(".py")
+        or (
+            os.path.isdir(os.path.join(REPO, entry))
+            and any(f.endswith(".py") for f in os.listdir(os.path.join(REPO, entry)))
+        )
+    )
+}
 
 
 def _local_imports(tree: ast.AST):
@@ -72,22 +48,32 @@ def _local_imports(tree: ast.AST):
                     yield node.lineno, alias.name, None
 
 
+def _has(module, name: str) -> bool:
+    """``from module import name`` succeeds: an attribute or a submodule."""
+    if hasattr(module, name):
+        return True
+    if not hasattr(module, "__path__"):  # a plain module has no submodules
+        return False
+    return importlib.util.find_spec(f"{module.__name__}.{name}") is not None
+
+
+def test_local_roots_cover_the_imported_repo_modules():
+    assert {"bench", "stream_processor_spark", "scripts", "tests"} <= LOCAL_ROOTS
+
+
 @pytest.mark.parametrize("script", SCRIPTS)
 def test_script_compiles_and_local_imports_resolve(script):
     path = os.path.join(SCRIPTS_DIR, script)
     with open(path) as fh:
         src = fh.read()
     compile(src, path, "exec")
-    tree = ast.parse(src, path)
     problems = []
-    for line, module, name in _local_imports(tree):
-        mod_path = _module_path(module)
-        if mod_path is None:
-            problems.append(f"{script}:{line}: no module {module}")
+    for line, module, name in _local_imports(ast.parse(src, path)):
+        try:
+            mod = importlib.import_module(module)
+        except ImportError as exc:
+            problems.append(f"{script}:{line}: cannot import {module}: {exc}")
             continue
-        if name is None or name == "*":
-            continue
-        bound = _bound_names(mod_path)
-        if name not in bound and "*" not in bound and not _module_path(f"{module}.{name}"):
+        if name is not None and name != "*" and not _has(mod, name):
             problems.append(f"{script}:{line}: {module} has no {name}")
     assert not problems, "\n".join(problems)
