@@ -25,6 +25,11 @@ the sinks become cheap ``filter(route == ...)`` branches over a shared scan.
 No shuffle is introduced: routing is embarrassingly parallel, so at 100 TB
 this costs one map pass regardless of chain length.
 
+Route labels are spelled only here: ``ok``, ``dropped``, and per step
+``dlq_<step>`` (the step has a DLQ topic) or ``error_<step>`` (it has
+none). :func:`route_labels` lists every label a chain can emit from the
+plan alone, so callers count and split routes without reading the data.
+
 For *unanticipated* failures (arbitrary Python processors), see
 ``stream_processor_spark.pipeline.processors.ProcessorRegistry.
 apply_python_chain`` which captures exceptions inside an Arrow-vectorized
@@ -44,6 +49,27 @@ Cols = dict[str, Column]
 
 ROUTE_OK = "ok"
 ROUTE_DROPPED = "dropped"
+DLQ_PREFIX = "dlq_"
+ERROR_PREFIX = "error_"
+
+
+def failure_label(step_name: str, dlq_topic: str | None) -> str:
+    """Route of a record whose step ``step_name`` throws: the step's DLQ
+    when it has a topic, else a counted error."""
+    return (DLQ_PREFIX if dlq_topic else ERROR_PREFIX) + step_name
+
+
+def route_labels(names: list[str], dlq_topics: list[str | None]) -> list[str]:
+    """Every route a chain of steps ``names`` can emit: ``ok``,
+    ``dropped`` and each step's failure label, de-duplicated, in chain
+    order. A filter dropping mid-chain takes the next step's label and a
+    failed output check the last step's, so both are covered."""
+    labels = [ROUTE_OK, ROUTE_DROPPED]
+    for name, dlq_topic in zip(names, dlq_topics):
+        label = failure_label(name, dlq_topic)
+        if label not in labels:
+            labels.append(label)
+    return labels
 
 
 @dataclass
@@ -65,7 +91,7 @@ class Step:
 
     def failure_label(self) -> str:
         """Route when this step THROWS (incl. throwing on a null record)."""
-        return f"dlq_{self.name}" if self.dlq else f"error_{self.name}"
+        return failure_label(self.name, self.dlq)
 
 
 def apply_chain(df: DataFrame, steps: list[Step], out_prefix: str = "out_") -> DataFrame:
@@ -128,28 +154,3 @@ def apply_chain(df: DataFrame, steps: list[Step], out_prefix: str = "out_") -> D
             F.when(route == ROUTE_OK, cur[name]).alias(f"{out_prefix}{name}")
         )
     return df.select(*out_cols)
-
-
-def split_routes(routed: DataFrame) -> dict[str, DataFrame]:
-    """Split a routed DataFrame into per-route DataFrames (ok / dlq_* / ...).
-
-    Distinct route labels are read from the chain, not the data, by callers
-    that know their steps; this generic helper enumerates from data and is
-    intended for tests / small control flows. In streaming,
-    ``pipeline.runner.PipelineRunner.run_streaming`` filters a cached
-    micro-batch per route label inside ``foreachBatch`` without re-scanning
-    the source.
-
-    Guarded against streaming misuse: ``collect()`` on an unbounded
-    DataFrame is illegal anyway, but failing here with a pointed message
-    beats Spark's generic AnalysisException at action time.
-    """
-    if routed.isStreaming:
-        raise TypeError(
-            "split_routes enumerates route labels by collecting data and "
-            "cannot run on a streaming DataFrame — use "
-            "PipelineRunner.run_streaming, which filters the cached "
-            "micro-batch per KNOWN chain label inside foreachBatch"
-        )
-    labels = [r["route"] for r in routed.select("route").distinct().collect()]
-    return {label: routed.filter(F.col("route") == label) for label in labels}

@@ -291,44 +291,6 @@ def jvm_codec_available(fmt: str) -> bool:
     return _JVM_CODEC_OK[cache_key]
 
 
-def format_available(spark, fmt: str, impl: str = "any") -> bool:
-    """Can this session actually execute the codec?
-
-    ``impl="jvm"`` probes the Spark package with a 1-row plan (so callers
-    can fail fast at pipeline-build time instead of mid-stream);
-    ``impl="python"`` reports the vendored wire-codec fallback (always
-    runnable — pure Python over Arrow batches); ``impl="any"`` is the
-    engine's effective capability: every format is executable, via the
-    JVM when packaged, else the fallback.
-    """
-    if fmt == JSON:
-        return True
-    if fmt not in (AVRO, PROTOBUF):
-        return False
-    if impl == "python":
-        return True
-    if impl == "any":
-        return True
-    # impl == "jvm": end-to-end 1-row probe
-    try:
-        df = spark.range(1).select(F.struct(F.col("id")).alias("r"))
-        if fmt == AVRO:
-            _, to_avro_fn = _avro()
-            schema = (
-                '{"type":"record","name":"p","fields":'
-                '[{"name":"id","type":"long"}]}'
-            )
-            df.select(to_avro_fn(F.col("r"), schema)).collect()
-            return True
-        if fmt == PROTOBUF:
-            # descriptor needed for a real probe; class presence is the
-            # best signal available
-            return jvm_codec_available(PROTOBUF)
-    except Exception:
-        return False
-    return False
-
-
 # -- pure-Python wire-codec fallbacks (Arrow-batched pandas_udfs) ----------
 #
 # Used when the JVM package is absent. Scale note: these move payload

@@ -11,8 +11,9 @@ src/consumer.js:95,107,129,135,140,143,149:
     messages_dropped_total{pipeline_id, pod_name}
     message_processing_duration_seconds{pipeline_id, pod_name, step}
 
-Engine mapping: per-record counters become per-micro-batch route counts
-(one aggregation over the routed batch — counts, not per-row Python).
+Engine mapping: per-record counters become per-micro-batch route counts,
+observed while the write that fills the batch's cache runs (no extra
+aggregation job, no shuffle, no per-row Python).
 ``processors_applied_total`` is exact per processor: the reference
 increments per SUCCESSFUL application (consumer.js:95, inside the try),
 and drop detection runs after the whole chain (consumer.js:134) — so a
@@ -28,10 +29,16 @@ Serve over HTTP with :class:`exporter.MetricsServer` (the reference's
 
 from __future__ import annotations
 
+import json
 import threading
 from collections import defaultdict
 
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from stream_processor_spark.operators.dlq import (
+    DLQ_PREFIX, ERROR_PREFIX, ROUTE_DROPPED, ROUTE_OK,
+)
 
 try:  # StreamingQueryListener import location is stable in pyspark>=3.4
     from pyspark.sql.streaming import StreamingQueryListener
@@ -121,10 +128,10 @@ class PipelineMetrics:
         ``step_names`` is the chain's ordered processor-name list.
         """
         received = sum(route_counts.values())
-        ok = route_counts.get("ok", 0)
-        dropped = route_counts.get("dropped", 0)
-        dlq = sum(v for k, v in route_counts.items() if k.startswith("dlq_"))
-        errors = sum(v for k, v in route_counts.items() if k.startswith("error_"))
+        ok = route_counts.get(ROUTE_OK, 0)
+        dropped = route_counts.get(ROUTE_DROPPED, 0)
+        dlq = sum(v for k, v in route_counts.items() if k.startswith(DLQ_PREFIX))
+        errors = sum(v for k, v in route_counts.items() if k.startswith(ERROR_PREFIX))
         self.inc("messages_received_total", received)
         self.inc("messages_completed_total", ok)
         self.inc("messages_dropped_total", dropped)
@@ -137,7 +144,8 @@ class PipelineMetrics:
         # failures to its FIRST occurrence (pop-once) — exact for unique
         # names, conservative (never double-subtracting) for repeats.
         failed_at = {
-            name: route_counts.get(f"dlq_{name}", 0) + route_counts.get(f"error_{name}", 0)
+            name: route_counts.get(DLQ_PREFIX + name, 0)
+            + route_counts.get(ERROR_PREFIX + name, 0)
             for name in step_names
         }
         reached = received
@@ -199,10 +207,22 @@ def _fmt(x: float) -> str:
     return str(int(x)) if float(x).is_integer() else repr(x)
 
 
-def route_counts(routed_df) -> dict[str, int]:
-    """One tiny aggregation over a (cached) routed micro-batch."""
-    rows = routed_df.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()
-    return {r["route"]: r["n"] for r in rows}
+def route_counts(routed_df: DataFrame, labels: list[str]) -> dict[str, int]:
+    """Count a persisted routed micro-batch per route while filling its
+    cache: one observed ``noop`` write, a single stage with no shuffle.
+    ``labels`` must hold every route the chain can emit
+    (:func:`operators.dlq.route_labels`); returns the non-zero counts.
+    Sums are aliased by index, since processor names need not be valid
+    identifiers."""
+    obs = Observation()
+    route = F.col("route")
+    sums = [
+        F.sum((route == label).cast("long")).alias(str(i))
+        for i, label in enumerate(labels)
+    ]
+    routed_df.observe(obs, *sums).write.format("noop").mode("overwrite").save()
+    got = obs.get
+    return {label: got[str(i)] for i, label in enumerate(labels) if got[str(i)]}
 
 
 def lag_from_progress(progress: dict) -> float | None:
@@ -258,13 +278,7 @@ class MetricsListener(StreamingQueryListener):
         except AttributeError:
             duration_ms = 0
         self.metrics.observe_duration(duration_ms / 1000.0, step="total")
-        try:
-            import json as _json
-
-            doc = _json.loads(p.json)
-        except Exception:
-            doc = {}
-        lag = lag_from_progress(doc)
+        lag = lag_from_progress(json.loads(p.json))
         if lag is not None:
             self.metrics.set_gauge("consumer_lag", lag)
 

@@ -39,7 +39,13 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 
-from stream_processor_spark.operators.dlq import ROUTE_DROPPED, ROUTE_OK, Step, apply_chain
+from stream_processor_spark.operators.dlq import (
+    ROUTE_DROPPED,
+    ROUTE_OK,
+    Step,
+    apply_chain,
+    failure_label,
+)
 
 _INT_TYPES = frozenset({"tinyint", "smallint", "int", "bigint"})
 
@@ -195,7 +201,8 @@ class ProcessorRegistry:
         - all steps pass → route ``ok`` with transformed out_* columns.
 
         Records are delivered to processors with real ``None`` for SQL
-        NULLs (never pandas NaN), matching the JS contract.
+        NULLs (never pandas NaN) and integral fields as ``int`` (never a
+        float, whatever else the batch holds), matching the JS contract.
         """
         procs = [self.get(n) for n in names]
         for p in procs:
@@ -203,10 +210,12 @@ class ProcessorRegistry:
                 raise ValueError(f"processor {p.name!r} has no record_fn")
         dlq_topics = dlq_topics or [None] * len(names)
         chain = [
-            (p.name, p.record_fn, dlq) for p, dlq in zip(procs, dlq_topics)
+            (p.record_fn, failure_label(p.name, dlq))
+            for p, dlq in zip(procs, dlq_topics)
         ]
         in_cols = df.columns
         out_dtypes = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        int_cols = [c for c in in_cols if out_dtypes[c] in _INT_TYPES]
         out_schema_fields = ", ".join(
             [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
             + ["route string"]
@@ -221,22 +230,26 @@ class ProcessorRegistry:
                 routes, outs = [], []
                 # NaN/NaT → None so processors see the JS null contract
                 clean = pdf.astype(object).where(pdf.notna(), None)
+                # Arrow hands pandas an int column holding a null as
+                # float64: give processors ints whatever the batch holds
+                for c in int_cols:
+                    clean[c] = pd.Series(
+                        [None if v is None else int(v) for v in clean[c]],
+                        index=clean.index,
+                        dtype=object,
+                    )
                 for rec in clean.to_dict("records"):
                     route, cur = ROUTE_OK, dict(rec)
-                    for step_name, fn, dlq in chain:
+                    for fn, label in chain:
                         if cur is None:
                             # reference: processor derefs the null message
                             # and throws → this step's DLQ/error
-                            route = (
-                                f"dlq_{step_name}" if dlq else f"error_{step_name}"
-                            )
+                            route = label
                             break
                         try:
                             cur = fn(cur)
                         except Exception:
-                            route = (
-                                f"dlq_{step_name}" if dlq else f"error_{step_name}"
-                            )
+                            route = label
                             break
                     if route == ROUTE_OK and cur is None:
                         route = ROUTE_DROPPED  # chain ended null → dropped
@@ -247,11 +260,7 @@ class ProcessorRegistry:
                         for c in in_cols:
                             ok, cv = _coerce_out(cur.get(c), out_dtypes[c])
                             if not ok:
-                                last_name, _, last_dlq = chain[-1]
-                                route = (
-                                    f"dlq_{last_name}" if last_dlq
-                                    else f"error_{last_name}"
-                                )
+                                route = chain[-1][1]
                                 break
                             coerced[c] = cv
                         else:

@@ -17,8 +17,11 @@ Semantics parity:
   path);
 - dropped (filter) records are counted, not written (consumer.js:134-137).
 
-Scale notes: the micro-batch is cached once and each route branch filters
-the cached frame (no source re-read per sink); route split adds no shuffle.
+Scale notes: one observed ``noop`` write fills the micro-batch's cache and
+counts every route label in the same stage; each route branch then filters
+the cached frame (no source re-read per sink). A batch runs one job to
+fill and count, one for the ok write and one per non-empty DLQ topic, with
+no shuffle.
 Kafka sinks are plan-built but need a broker — the file/parquet sinks give
 the same multi-sink semantics for local verification.
 """
@@ -32,7 +35,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stream_processor_spark.operators.dlq import ROUTE_OK
+from stream_processor_spark.operators.dlq import ROUTE_OK, failure_label, route_labels
 from stream_processor_spark.pipeline.catalog import PipelineCatalog, ResolvedPipeline
 from stream_processor_spark.pipeline.codecs import SchemaRegistry
 from stream_processor_spark.pipeline.metrics import PipelineMetrics, route_counts
@@ -277,7 +280,9 @@ class PipelineRunner:
     ) -> dict[str, int]:
         routed = routed.persist()
         try:
-            counts = route_counts(routed)
+            counts = route_counts(
+                routed, route_labels(resolved.processor_names, resolved.dlq_topics)
+            )
             ok = routed.filter(F.col("route") == ROUTE_OK)
             target_sink.write_batch(self.encode_output(resolved, ok), batch_id)
             # Steps are grouped by DLQ topic so a topic shared by several
@@ -293,7 +298,7 @@ class PipelineRunner:
                 if dlq_topic is None:
                     continue
                 labels = by_topic.setdefault(dlq_topic, [])
-                label = f"dlq_{step_name}"
+                label = failure_label(step_name, dlq_topic)
                 if label not in labels:
                     labels.append(label)
             # ORIGINAL record payload: input columns only (consumer.js:100),

@@ -1,4 +1,4 @@
-"""CLI + remaining operator utilities: exact_dedup, split_routes,
+"""CLI + remaining operator utilities: exact_dedup, route labels,
 codec availability probe, CLI list/run-pipelines."""
 
 from __future__ import annotations
@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from stream_processor_spark.__main__ import main as cli_main
 from stream_processor_spark.catalog import Tables
 from stream_processor_spark.operators.dedup import exact_dedup
-from stream_processor_spark.operators.dlq import split_routes
-from stream_processor_spark.pipeline.codecs import AVRO, JSON, format_available
+from stream_processor_spark.operators.dlq import route_labels
+from stream_processor_spark.pipeline.codecs import AVRO, JSON, jvm_codec_available
 from stream_processor_spark.pipeline.processors import BUILTIN_PROCESSORS
 from stream_processor_spark.queries import REGISTRY
 
@@ -28,7 +28,7 @@ def test_exact_dedup_survivor_matches_group_min(spark, sf_dir):
     assert set(via_window.columns) == set(e.columns)
 
 
-def test_split_routes(spark, sf_dir):
+def test_routed_frame_splits_by_route(spark, sf_dir):
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     schema = StructType(
@@ -44,19 +44,22 @@ def test_split_routes(spark, sf_dir):
     routed = BUILTIN_PROCESSORS.apply_expression_chain(
         df, ["capitalize", "isEven"], ["dlq-1", None]
     )
-    parts = split_routes(routed)
-    assert set(parts) == {"ok", "dlq_capitalize", "dropped"}
-    assert [r.key for r in parts["ok"].collect()] == ["a"]
-    assert [r.key for r in parts["dlq_capitalize"].collect()] == ["b"]
+    keys: dict[str, list[str]] = {}
+    for r in routed.select("route", "key").collect():
+        keys.setdefault(r.route, []).append(r.key)
+    assert set(keys) == {"ok", "dlq_capitalize", "dropped"}
+    assert keys["ok"] == ["a"]
+    assert keys["dlq_capitalize"] == ["b"]
+    # the plan-time label set covers every route the data carries
+    assert set(keys) <= set(route_labels(["capitalize", "isEven"], ["dlq-1", None]))
 
 
 def test_codec_availability_probe(spark):
-    assert format_available(spark, JSON) is True
+    assert jvm_codec_available(JSON) is True
     # no spark-avro jar in this container — the JVM probe must say so,
-    # not blow up; the engine is still avro-capable via the vendored
-    # pure-Python wire codec (round 2), so the effective answer is True
-    assert format_available(spark, AVRO, impl="jvm") is False
-    assert format_available(spark, AVRO) is True
+    # not blow up; the engine stays avro-capable via the vendored
+    # pure-Python wire codec
+    assert jvm_codec_available(AVRO) is False
 
 
 def test_cli_list_queries(capsys):

@@ -578,21 +578,3 @@ def test_avro_encode_null_non_nullable_contained(spark):
     ok = [bytes(r.v) if r.v is not None else None for r in out]
     assert ok[0] is not None and avro_py.decode(ok[0], flat) == {"key": "a", "num": 1}
     assert ok[1] is None  # contained, not 'None'-corrupted, not a crash
-
-
-def test_split_routes_rejects_streaming_frame(spark, tmp_path):
-    """split_routes enumerates labels via collect() — on a streaming
-    frame it must fail fast with a pointed message, not surface Spark's
-    generic action-on-stream error later."""
-    import pytest as _pytest
-
-    from stream_processor_spark.operators.dlq import split_routes
-    from stream_processor_spark.streaming.file_stream import FileBroker
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType([StructField("route", StringType())])
-    topic = FileBroker(str(tmp_path)).topic("t", schema)
-    topic.produce_rows(spark, [{"route": "ok"}])
-    stream = topic.read_stream(spark)
-    with _pytest.raises(TypeError, match="streaming"):
-        split_routes(stream)

@@ -51,9 +51,9 @@ def jvm_spark():
     from stream_processor_spark.session import get_spark
 
     spark = get_spark("jvm-codec-parity")
-    from stream_processor_spark.pipeline.codecs import format_available
+    from stream_processor_spark.pipeline.codecs import jvm_codec_available
 
-    if not format_available(spark, "avro", impl="jvm"):
+    if not jvm_codec_available("avro"):
         pytest.skip(
             "spark-avro did not resolve into this session (a session "
             "without spark.jars.packages was already active, or Ivy "

@@ -213,6 +213,27 @@ def test_python_chain_wrong_typed_output_routes_not_crashes(spark):
     assert all(v[0] == "ok" and isinstance(v[1], int) for v in rows.values())
 
 
+def test_python_chain_sees_ints_whatever_the_batch_holds(spark):
+    """Arrow hands pandas an int column holding a null as float64; a
+    processor must still get ``5``, not ``5.0``, whether or not a
+    null-``num`` row shares its batch."""
+    from stream_processor_spark.pipeline.processors import Processor
+
+    reg = ProcessorRegistry()
+    reg.register(
+        Processor(name="show", record_fn=lambda r: {**r, "value": f"n={r['num']}"})
+    )
+    schema = demo_message_schema()
+    alone = spark.createDataFrame([("a", "x", 5)], schema)
+    # one partition, so both rows share one Arrow batch
+    mixed = spark.createDataFrame([("a", "x", 5), ("b", "y", None)], schema).coalesce(1)
+    for df in (alone, mixed):
+        routed = reg.apply_python_chain(df, ["show"], [None])
+        got = {r.key: r.out_value for r in routed.collect()}
+        assert got["a"] == "n=5"
+    assert got["b"] == "n=None"
+
+
 def test_catalog_from_jdbc_roundtrip(spark, catalog, tmp_path):
     """PipelineCatalog.from_jdbc mirrors listen.js:46-87's Postgres
     resolution. Exercised against Spark's bundled embedded Derby (a real
@@ -422,15 +443,14 @@ def test_protobuf_wire_roundtrip(spark, catalog):
     }
 
 
-def test_format_available_reports_fallbacks(spark):
-    from stream_processor_spark.pipeline.codecs import format_available
+def test_jvm_codec_probe_answers_every_format(spark):
+    from stream_processor_spark.pipeline.codecs import jvm_codec_available
 
-    assert format_available(spark, "json")
-    # engine capability: every format executable (JVM or vendored codec)
-    assert format_available(spark, "avro")
-    assert format_available(spark, "protobuf")
-    assert format_available(spark, "avro", impl="python")
-    assert format_available(spark, "protobuf", impl="python")
+    assert jvm_codec_available("json")
+    # a plain answer for each wire format, never an exception: without
+    # the JVM package the engine runs the vendored codec (round trips above)
+    for fmt in ("avro", "protobuf"):
+        assert isinstance(jvm_codec_available(fmt), bool)
 
 
 def test_idempotent_sink_replay_does_not_duplicate(spark, catalog, tmp_path):
@@ -511,6 +531,92 @@ def test_shared_dlq_topic_no_clobber_on_idempotent_replay(spark, tmp_path):
     rows = spark.read.parquet(dlq.path_or_topic).collect()
     # both steps' originals present exactly once each
     assert sorted((r.key, r.num) for r in rows) == [("k2", 3), ("k3", 4)]
+
+
+def _run_in_job_group(spark, fn):
+    """Run ``fn`` under a fresh Spark job group; return its result, the
+    number of jobs it ran, and the ids of its completed stages that read
+    shuffle data."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # job and stage events are async
+    status, store = sc.statusTracker(), jsc.statusStore()
+    jobs = status.getJobIdsForGroup(group)
+    shuffle_reads = [
+        s
+        for j in jobs
+        for s in status.getJobInfo(j).stageIds
+        if store.lastStageAttempt(s).numCompleteTasks() > 0
+        and store.lastStageAttempt(s).shuffleReadRecords() > 0
+    ]
+    return out, len(jobs), shuffle_reads
+
+
+def test_run_batch_job_count(spark, catalog, tmp_path):
+    """One job fills the batch's cache and counts its routes, one writes
+    the ok branch, one each non-empty DLQ topic; none reads a shuffle."""
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS)
+    for name, records, want_jobs in (
+        ("with-dlq", RECORDS, 3),
+        ("no-dlq", [r for r in RECORDS if r["value"] is not None], 2),
+    ):
+        df = spark.createDataFrame(records, schema=demo_message_schema())
+        target = Sink("parquet", str(tmp_path / name / "target"))
+        dlq = Sink("parquet", str(tmp_path / name / "dlq"))
+        counts, jobs, shuffle_reads = _run_in_job_group(
+            spark, lambda: runner.run_batch(1, df, target, {"dlq-capitalize": dlq})
+        )
+        assert sum(counts.values()) == len(records)
+        assert jobs == want_jobs, name
+        assert shuffle_reads == [], name
+
+
+def test_route_counts_cover_every_row(spark, catalog, tmp_path):
+    """Route counts sum to the batch's rows for a batch with an empty ok
+    branch and for a python chain whose processor names are not valid
+    identifiers."""
+    from stream_processor_spark.pipeline.processors import Processor
+
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS)
+    no_ok = [r for r in RECORDS if r["key"] in ("k2", "k3")]
+    counts = runner.run_batch(
+        1,
+        spark.createDataFrame(no_ok, schema=demo_message_schema()),
+        Sink("parquet", str(tmp_path / "no-ok" / "target")),
+        {"dlq-capitalize": Sink("parquet", str(tmp_path / "no-ok" / "dlq"))},
+    )
+    assert counts == {"dropped": 1, "dlq_capitalize": 1}
+
+    names = {"add10": "add-10", "capitalize": "capitalize.v2", "isEven": "is even"}
+    reg = ProcessorRegistry()
+    doc = {**CATALOG_DOC, "processors": []}
+    for p in CATALOG_DOC["processors"]:
+        builtin = BUILTIN_PROCESSORS.get(p["processor_name"])
+        name = names.get(builtin.name, builtin.name)
+        reg.register(
+            Processor(name=name, is_filter=builtin.is_filter, record_fn=builtin.record_fn)
+        )
+        doc["processors"].append({**p, "processor_name": name})
+    metrics = PipelineMetrics("1")
+    counts = PipelineRunner(PipelineCatalog.from_dict(doc), reg).run_batch(
+        1,
+        _demo_df(spark),
+        Sink("parquet", str(tmp_path / "python" / "target")),
+        {"dlq-capitalize": Sink("parquet", str(tmp_path / "python" / "dlq"))},
+        metrics,
+    )
+    assert counts == {"ok": 2, "dropped": 1, "dlq_capitalize.v2": 1}
+    assert sum(counts.values()) == len(RECORDS)
+    assert metrics.snapshot()["messages_dlq_total"] == 1
 
 
 def test_deploy_all_starts_only_active(spark, catalog, tmp_path):
