@@ -64,7 +64,7 @@ class CommitConflict(RuntimeError):
     """Raised internally when a manifest rename loses a race."""
 
 
-class _HadoopFS:
+class HadoopFS:
     """Thin py4j wrapper over org.apache.hadoop.fs.FileSystem so the
     table works on any Spark-supported filesystem, not just file://."""
 
@@ -103,6 +103,19 @@ class _HadoopFS:
             if f.getName().endswith(suffix):
                 out.append(f.toString())
         return out
+
+    def list_files(self, p: str) -> list[str]:
+        """Fully-qualified paths of the files directly under ``p``."""
+        return [
+            st.getPath().toString()
+            for st in self._fs.listStatus(self.path(p))
+            if st.isFile()
+        ]
+
+    def uri(self) -> str:
+        """Scheme and authority of this filesystem: a rename works only
+        between paths that share them."""
+        return self._fs.getUri().toString()
 
     def write_text(self, p: str, text: str) -> None:
         stream = self._fs.create(self.path(p), True)
@@ -176,7 +189,7 @@ class TxnTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        self.fs = _HadoopFS(spark, self.root)
+        self.fs = HadoopFS(spark, self.root)
         self.manifest_dir = f"{self.root}/{MANIFEST_DIR}"
         self.data_dir = f"{self.root}/{DATA_DIR}"
 
@@ -227,6 +240,17 @@ class TxnTable:
         their fully-qualified paths. Nothing is visible yet."""
         txn_dir = f"{self.data_dir}/txn-{uuid.uuid4().hex}"
         df.write.mode("errorifexists").parquet(txn_dir)
+        return sorted(self.fs.list_files_recursive(txn_dir, ".parquet"))
+
+    def _adopt(self, src_dir: str) -> list[str]:
+        """Move a directory of parquet files, already written on this
+        table's filesystem, to a fresh txn directory with one rename (no
+        data moves) and return their fully-qualified paths. Nothing is
+        visible yet."""
+        txn_dir = f"{self.data_dir}/txn-{uuid.uuid4().hex}"
+        self.fs.mkdirs(self.data_dir)
+        if not self.fs.rename_no_overwrite(src_dir, txn_dir):
+            raise OSError(f"TxnTable {self.root}: could not move {src_dir} in")
         return sorted(self.fs.list_files_recursive(txn_dir, ".parquet"))
 
     def _try_commit(self, manifest: dict) -> bool:
@@ -301,6 +325,15 @@ class TxnTable:
         if txn_id is not None and txn_id in self.committed_txns():
             return None  # cheap pre-check: skip staging entirely
         return self._commit(self._stage(df), "append", txn_id, replace=False)
+
+    def append_dir(self, src_dir: str, txn_id: str | None = None) -> int | None:
+        """Append the parquet files under ``src_dir`` by moving the
+        directory into the table, for data another job already wrote on
+        this table's filesystem. Same replay contract as :meth:`append`;
+        the data is already written, so there is no staging for a
+        pre-check to skip, and a replay's moved files are dropped by the
+        commit loop."""
+        return self._commit(self._adopt(src_dir), "append", txn_id, replace=False)
 
     def overwrite(self, df: DataFrame, txn_id: str | None = None) -> int | None:
         """Replace the table contents with ``df`` (old files stay on

@@ -203,6 +203,16 @@ class SchemaRegistry:
             return enc
         return F.concat(F.lit(wire_header(s.schema_id)), enc.cast("binary"))
 
+    def encodes_in_jvm(self, subject: str) -> bool:
+        """True when :meth:`encode` compiles to a JVM expression; False
+        when it runs the vendored pure-Python codec in a pandas_udf."""
+        s = self.get(subject)
+        if s.fmt == AVRO:
+            return jvm_codec_available(AVRO)
+        if s.fmt == PROTOBUF:
+            return s.proto_descriptor is not None and jvm_codec_available(PROTOBUF)
+        return s.fmt == JSON
+
     def _decode_payload(self, s: SubjectSchema, value: Column) -> Column:
         if s.fmt == JSON:
             return F.from_json(value.cast("string"), s.spark_schema, s.options)
@@ -230,11 +240,11 @@ class SchemaRegistry:
         if s.fmt == JSON:
             return F.to_json(record, s.options)
         if s.fmt == AVRO:
-            if jvm_codec_available(AVRO):
+            if self.encodes_in_jvm(s.subject):
                 return _avro()[1](record, s.avro_json)
             return _py_avro_encode(s, record)
         if s.fmt == PROTOBUF:
-            if s.proto_descriptor is not None and jvm_codec_available(PROTOBUF):
+            if self.encodes_in_jvm(s.subject):
                 to_protobuf = _protobuf()[1]
                 return to_protobuf(record, s.proto_message, s.proto_descriptor, s.options)
             if s.proto_spec is not None:

@@ -12,8 +12,8 @@ src/consumer.js:95,107,129,135,140,143,149:
     message_processing_duration_seconds{pipeline_id, pod_name, step}
 
 Engine mapping: per-record counters become per-micro-batch route counts,
-observed while the write that fills the batch's cache runs (no extra
-aggregation job, no shuffle, no per-row Python).
+observed on the batch's routed write (no extra aggregation job, no
+shuffle, no per-row Python).
 ``processors_applied_total`` is exact per processor: the reference
 increments per SUCCESSFUL application (consumer.js:95, inside the try),
 and drop detection runs after the whole chain (consumer.js:134) — so a
@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import threading
 from collections import defaultdict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -207,12 +208,15 @@ def _fmt(x: float) -> str:
     return str(int(x)) if float(x).is_integer() else repr(x)
 
 
-def route_counts(routed_df: DataFrame, labels: list[str]) -> dict[str, int]:
-    """Count a persisted routed micro-batch per route while filling its
-    cache: one observed ``noop`` write, a single stage with no shuffle.
-    ``labels`` must hold every route the chain can emit
-    (:func:`operators.dlq.route_labels`); returns the non-zero counts.
-    Sums are aliased by index, since processor names need not be valid
+def observe_routes(
+    routed_df: DataFrame, labels: list[str]
+) -> tuple[DataFrame, Callable[[], dict[str, int]]]:
+    """Attach per-route counts to a routed micro-batch. Returns the
+    observed frame and a function that, once one action over that frame
+    has run, gives the non-zero counts. Filter the observed frame, not
+    its input, so every route is counted. ``labels`` must hold every
+    route the chain can emit (:func:`operators.dlq.route_labels`). Sums
+    are aliased by index, since processor names need not be valid
     identifiers."""
     obs = Observation()
     route = F.col("route")
@@ -220,9 +224,21 @@ def route_counts(routed_df: DataFrame, labels: list[str]) -> dict[str, int]:
         F.sum((route == label).cast("long")).alias(str(i))
         for i, label in enumerate(labels)
     ]
-    routed_df.observe(obs, *sums).write.format("noop").mode("overwrite").save()
-    got = obs.get
-    return {label: got[str(i)] for i, label in enumerate(labels) if got[str(i)]}
+
+    def counts() -> dict[str, int]:
+        got = obs.get
+        return {label: got[str(i)] for i, label in enumerate(labels) if got[str(i)]}
+
+    return routed_df.observe(obs, *sums), counts
+
+
+def route_counts(routed_df: DataFrame, labels: list[str]) -> dict[str, int]:
+    """Count a routed micro-batch per route with one observed ``noop``
+    write: a single stage with no shuffle, which also fills the batch's
+    cache when ``routed_df`` is persisted."""
+    observed, counts = observe_routes(routed_df, labels)
+    observed.write.format("noop").mode("overwrite").save()
+    return counts()
 
 
 def lag_from_progress(progress: dict) -> float | None:

@@ -17,11 +17,19 @@ Semantics parity:
   path);
 - dropped (filter) records are counted, not written (consumer.js:134-137).
 
-Scale notes: one observed ``noop`` write fills the micro-batch's cache and
-counts every route label in the same stage; each route branch then filters
-the cached frame (no source re-read per sink). A batch runs one job to
-fill and count, one for the ok write and one per non-empty DLQ topic, with
-no shuffle.
+Scale notes: on the wire path (a runner with a ``SchemaRegistry`` whose
+outgoing encoder runs in the JVM, every sink a file kind on one Hadoop
+filesystem) a micro-batch is ONE Spark job, as the reference produces a
+batch's target and DLQ messages in one send (consumer.js:128-149). The
+routed frame carries a route-count observation, is encoded to
+``(key, value, dest)`` and written once with ``partitionBy("dest")`` into
+``<target root>/_staging/batch-<id>``; the driver then moves each
+``dest`` directory into its sink by rename and commits it. Elsewhere (no
+registry: ok rows keep every routed column; a pandas encoder; kafka/noop
+sinks; sinks on different filesystems) one observed ``noop`` write fills
+the batch's cache and counts every route, then each route branch filters
+the cached frame: one job to fill and count, one for the ok write and
+one per non-empty DLQ topic. Neither path shuffles.
 Kafka sinks are plan-built but need a broker — the file/parquet sinks give
 the same multi-sink semantics for local verification.
 """
@@ -29,6 +37,7 @@ the same multi-sink semantics for local verification.
 from __future__ import annotations
 
 import os
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -36,10 +45,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processor_spark.operators.dlq import ROUTE_OK, failure_label, route_labels
+from stream_processor_spark.operators.txn_table import HadoopFS, TxnTable
 from stream_processor_spark.pipeline.catalog import PipelineCatalog, ResolvedPipeline
 from stream_processor_spark.pipeline.codecs import SchemaRegistry
-from stream_processor_spark.pipeline.metrics import PipelineMetrics, route_counts
+from stream_processor_spark.pipeline.metrics import (
+    PipelineMetrics,
+    observe_routes,
+    route_counts,
+)
 from stream_processor_spark.pipeline.processors import ProcessorRegistry
+
+# Sink kinds a staged routed write can publish to by rename.
+FILE_SINKS = ("parquet", "parquet_idempotent", "txn_table")
+
+
+@dataclass(frozen=True)
+class Staged:
+    """One sink's share of a routed write, already on disk: a directory
+    of parquet files on the sink's filesystem."""
+
+    spark: SparkSession
+    path: str
 
 
 @dataclass
@@ -62,6 +88,12 @@ class Sink:
     ``compression`` shorthand maps to ``kafka.compression.type``
     (producer-side gzip/snappy/lz4/zstd — the reference's load-test
     producer ships gzip, loadTest.js:73).
+
+    :meth:`write_batch` takes a DataFrame, which it writes, or, for the
+    file kinds, a :class:`Staged` directory, which it publishes without
+    moving data twice: ``parquet`` moves the part files into the root,
+    ``parquet_idempotent`` renames the directory to ``batch_id=<id>``
+    and ``txn_table`` renames it under ``data/`` and commits it.
     """
 
     kind: str
@@ -75,9 +107,20 @@ class Sink:
                 "kafka.compression.type": self.options["compression"],
             }
 
-    def write_batch(self, df: DataFrame, batch_id: int | None = None) -> None:
+    def write_batch(
+        self, df: DataFrame | Staged, batch_id: int | None = None
+    ) -> None:
+        staged = isinstance(df, Staged)
         if self.kind == "parquet":
-            df.write.mode("append").parquet(self.path_or_topic)
+            if staged:
+                fs = HadoopFS(df.spark, self.path_or_topic)
+                fs.mkdirs(self.path_or_topic)
+                for f in fs.list_files(df.path):
+                    dst = f"{self.path_or_topic}/{f.rsplit('/', 1)[1]}"
+                    if not fs.rename_no_overwrite(f, dst):
+                        raise OSError(f"could not move {f} to {dst}")
+            else:
+                df.write.mode("append").parquet(self.path_or_topic)
         elif self.kind == "parquet_idempotent":
             # deterministic per-batch target + overwrite ⇒ replaying
             # batch N cannot duplicate rows; batch_id comes from the
@@ -85,29 +128,30 @@ class Sink:
             # an identity (ad-hoc run_batch) gets a unique directory —
             # appending behavior — rather than colliding with (and
             # silently deleting) streaming batch 0's committed output.
-            import uuid
-
             part = (
                 f"batch_id={batch_id}"
                 if batch_id is not None
                 else f"batch_id=adhoc-{uuid.uuid4().hex[:12]}"
             )
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.path_or_topic, part)
-            )
+            dst = os.path.join(self.path_or_topic, part)
+            if staged:
+                fs = HadoopFS(df.spark, dst)
+                fs.delete(dst, recursive=True)
+                fs.mkdirs(self.path_or_topic)
+                if not fs.rename_no_overwrite(df.path, dst):
+                    raise OSError(f"could not move {df.path} to {dst}")
+            else:
+                df.write.mode("overwrite").parquet(dst)
         elif self.kind == "txn_table":
-            from stream_processor_spark.operators.txn_table import TxnTable
-
-            import uuid
-
             txn = (
                 f"batch-{batch_id}"
                 if batch_id is not None
                 else f"adhoc-{uuid.uuid4().hex[:12]}"
             )
-            TxnTable(df.sparkSession, self.path_or_topic).append(
-                df, txn_id=txn
-            )
+            if staged:
+                TxnTable(df.spark, self.path_or_topic).append_dir(df.path, txn_id=txn)
+            else:
+                TxnTable(df.sparkSession, self.path_or_topic).append(df, txn_id=txn)
         elif self.kind == "kafka":  # pragma: no cover - needs a broker
             (
                 df.write.format("kafka")
@@ -119,6 +163,17 @@ class Sink:
             df.count()
         else:
             raise ValueError(f"unknown sink kind {self.kind!r}")
+
+    def has_committed(self, spark: SparkSession, batch_id: int | None) -> bool:
+        """Does this sink already hold micro-batch ``batch_id``, so that a
+        replay must not write it again? Only a ``txn_table`` knows; the
+        other kinds rewrite (or re-append) on replay."""
+        return (
+            self.kind == "txn_table"
+            and batch_id is not None
+            and f"batch-{batch_id}"
+            in TxnTable(spark, self.path_or_topic).committed_txns()
+        )
 
 
 class PipelineRunner:
@@ -206,21 +261,22 @@ class PipelineRunner:
         dlqMessage with the same encoder as the main output)."""
         if self.schemas is None:
             return originals
-        rec_cols = [c for c in originals.columns if not c.startswith("_")]
-        rec = F.struct(*[F.col(c) for c in rec_cols])
         return originals.select(
-            self._wire_key(rec_cols, originals.columns).alias("key"),
-            self.schemas.encode(resolved.outgoing_schema, rec).alias("value"),
+            self._wire_key(originals.columns).alias("key"),
+            self.schemas.encode(
+                resolved.outgoing_schema, _original_record(originals.columns)
+            ).alias("value"),
         )
 
     @staticmethod
-    def _wire_key(rec_cols: list[str], all_cols: list[str]) -> F.Column:
+    def _wire_key(all_cols: list[str], out_prefix: str = "out_") -> F.Column:
         """Outgoing Kafka key = the DECODED RECORD's 'key' field
         (consumer.js:131,141 uses decodedMessage.key for both ok and DLQ
-        paths), falling back to the transport key only when the record has
-        no 'key' field (JS undefined → null key; the transport key is the
+        paths — the INPUT record's field, not the transformed value),
+        falling back to the transport key only when the record has no
+        'key' field (JS undefined → null key; the transport key is the
         closer observable analog)."""
-        if "key" in rec_cols:
+        if "key" in _record_cols(all_cols, out_prefix):
             return F.col("key").cast("string")
         if "_key" in all_cols:
             return F.col("_key")
@@ -231,25 +287,11 @@ class PipelineRunner:
         """ok branch → (key, value) wire frame using the OUTGOING schema."""
         if self.schemas is None:
             return routed_ok
-        out_cols = [
-            c
-            for c in routed_ok.columns
-            if c.startswith(out_prefix) and not c.startswith(f"{out_prefix}_")
-        ]
-        rec = F.struct(
-            *[F.col(c).alias(c[len(out_prefix):]) for c in out_cols]
-        )
-        # key parity (consumer.js:131): decodedMessage.key — the INPUT
-        # record's 'key' field, not the transformed value, not the
-        # transport key.
-        in_cols = [
-            c for c in routed_ok.columns
-            if not c.startswith("_") and not c.startswith(out_prefix)
-            and c != "route"
-        ]
         return routed_ok.select(
-            self._wire_key(in_cols, routed_ok.columns).alias("key"),
-            self.schemas.encode(resolved.outgoing_schema, rec).alias("value"),
+            self._wire_key(routed_ok.columns, out_prefix).alias("key"),
+            self.schemas.encode(
+                resolved.outgoing_schema, _out_record(routed_ok.columns, out_prefix)
+            ).alias("value"),
         )
 
     # -- execution ---------------------------------------------------------
@@ -269,6 +311,32 @@ class PipelineRunner:
             resolved, routed, target_sink, dlq_sinks or {}, metrics
         )
 
+    @staticmethod
+    def _dlq_branches(
+        resolved: ResolvedPipeline, dlq_sinks: dict[str, Sink]
+    ) -> list[tuple[Sink, list[str]]]:
+        """Each DLQ topic of the chain as (its sink, the route labels it
+        takes). Raises ``KeyError`` for a topic without a sink, so a
+        misbound pipeline fails before it writes anything.
+
+        Steps are grouped by DLQ topic so a topic shared by several chain
+        steps gets exactly ONE write per micro-batch. Writing per step
+        would aim every step at the same batch_id=N directory, and an
+        idempotent sink's overwrite would silently clobber the earlier
+        steps' rows for that batch."""
+        by_topic: dict[str, list[str]] = {}
+        for step_name, dlq_topic in zip(resolved.processor_names, resolved.dlq_topics):
+            if dlq_topic is None:
+                continue
+            labels = by_topic.setdefault(dlq_topic, [])
+            label = failure_label(step_name, dlq_topic)
+            if label not in labels:
+                labels.append(label)
+        missing = [t for t in by_topic if t not in dlq_sinks]
+        if missing:
+            raise KeyError(f"no sink bound for DLQ topic(s) {missing}")
+        return [(dlq_sinks[t], labels) for t, labels in by_topic.items()]
+
     def _write_routed(
         self,
         resolved: ResolvedPipeline,
@@ -278,47 +346,137 @@ class PipelineRunner:
         metrics: PipelineMetrics | None,
         batch_id: int | None = None,
     ) -> dict[str, int]:
+        branches = self._dlq_branches(resolved, dlq_sinks)
+        labels = route_labels(resolved.processor_names, resolved.dlq_topics)
+        sinks = [target_sink] + [sink for sink, _ in branches]
+        if self._one_write_serves(resolved, routed.sparkSession, sinks):
+            counts = self._write_staged(
+                resolved, routed, target_sink, branches, labels, batch_id
+            )
+        else:
+            counts = self._write_branches(
+                resolved, routed, target_sink, branches, labels, batch_id
+            )
+        if metrics is not None:
+            metrics.record_batch(counts, resolved.processor_names)
+        return counts
+
+    def _one_write_serves(
+        self, resolved: ResolvedPipeline, spark: SparkSession, sinks: list[Sink]
+    ) -> bool:
+        """Can one partitioned parquet write feed every sink? It needs ok
+        and DLQ rows in one ``(key, value)`` wire schema (a registry), an
+        outgoing encoder in the JVM (a pandas encoder fed both branches
+        would take their rows in one Arrow batch, where a null int in a
+        DLQ record turns the ok records' ints to floats), sinks that
+        accept a staged directory, and one filesystem for the renames."""
+        return (
+            self.schemas is not None
+            and self.schemas.encodes_in_jvm(resolved.outgoing_schema)
+            and all(s.kind in FILE_SINKS for s in sinks)
+            and len({HadoopFS(spark, s.path_or_topic).uri() for s in sinks}) == 1
+        )
+
+    def _write_staged(
+        self,
+        resolved: ResolvedPipeline,
+        routed: DataFrame,
+        target_sink: Sink,
+        branches: list[tuple[Sink, list[str]]],
+        labels: list[str],
+        batch_id: int | None,
+    ) -> dict[str, int]:
+        """The batch as one job: count every route, encode the ok rows
+        (``out_*``) and the DLQ rows (ORIGINAL record, consumer.js:100) to
+        the wire schema, write them once partitioned by destination, then
+        publish each destination's directory to its sink.
+
+        Replay is decided before the job: a sink that already committed
+        this batch gets no rows, and when no sink needs the batch the
+        routes are counted with a ``noop`` write instead, so the
+        observation never waits on a job that did not run."""
+        spark = routed.sparkSession
+        # one destination per distinct sink still missing this batch: the
+        # part files of different dest directories share names, so two
+        # directories must never be published into one sink
+        by_sink: dict[tuple[str, str], tuple[Sink, list[str]]] = {}
+        for sink, sink_labels in [(target_sink, [ROUTE_OK]), *branches]:
+            key = (sink.kind, sink.path_or_topic)
+            by_sink.setdefault(key, (sink, []))[1].extend(sink_labels)
+        pending = [
+            (sink, sink_labels)
+            for sink, sink_labels in by_sink.values()
+            if not sink.has_committed(spark, batch_id)
+        ]
+        if not pending:
+            return route_counts(routed, labels)
+
+        route = F.col("route")
+        dest = None
+        for i, (_, sink_labels) in enumerate(pending):
+            hit = route.isin(sink_labels)
+            dest = F.when(hit, i) if dest is None else dest.when(hit, i)
+        encode = self.schemas.encode
+        value = F.when(
+            route == ROUTE_OK,
+            encode(resolved.outgoing_schema, _out_record(routed.columns)),
+        ).otherwise(encode(resolved.outgoing_schema, _original_record(routed.columns)))
+
+        staging = "{}/_staging/{}".format(
+            target_sink.path_or_topic.rstrip("/"),
+            f"batch-{batch_id}" if batch_id is not None else f"adhoc-{uuid.uuid4().hex}",
+        )
+        fs = HadoopFS(spark, staging)
+        fs.delete(staging, recursive=True)  # left by an attempt that crashed
+        observed, counts = observe_routes(routed, labels)
+        try:
+            (
+                observed.filter(dest.isNotNull())
+                .select(
+                    self._wire_key(routed.columns).alias("key"),
+                    value.alias("value"),
+                    dest.alias("dest"),
+                )
+                .write.partitionBy("dest")
+                .parquet(staging)
+            )
+            written = set(fs.list_names(staging))
+            for i, (sink, _) in enumerate(pending):
+                if f"dest={i}" in written:
+                    sink.write_batch(Staged(spark, f"{staging}/dest={i}"), batch_id)
+            return counts()
+        finally:
+            fs.delete(staging, recursive=True)
+
+    def _write_branches(
+        self,
+        resolved: ResolvedPipeline,
+        routed: DataFrame,
+        target_sink: Sink,
+        branches: list[tuple[Sink, list[str]]],
+        labels: list[str],
+        batch_id: int | None,
+    ) -> dict[str, int]:
+        """The batch as one job to fill its cache and count its routes,
+        then one write per non-empty branch over the cached frame."""
         routed = routed.persist()
         try:
-            counts = route_counts(
-                routed, route_labels(resolved.processor_names, resolved.dlq_topics)
-            )
+            counts = route_counts(routed, labels)
             ok = routed.filter(F.col("route") == ROUTE_OK)
             target_sink.write_batch(self.encode_output(resolved, ok), batch_id)
-            # Steps are grouped by DLQ topic so a topic shared by several
-            # chain steps gets exactly ONE write per micro-batch (their
-            # branches unioned via route.isin). Writing per step would aim
-            # every step at the same batch_id=N directory, and an
-            # idempotent sink's overwrite would silently clobber the
-            # earlier steps' rows for that batch.
-            by_topic: dict[str, list[str]] = {}
-            for step_name, dlq_topic in zip(
-                resolved.processor_names, resolved.dlq_topics
-            ):
-                if dlq_topic is None:
-                    continue
-                labels = by_topic.setdefault(dlq_topic, [])
-                label = failure_label(step_name, dlq_topic)
-                if label not in labels:
-                    labels.append(label)
             # ORIGINAL record payload: input columns only (consumer.js:100),
             # wire-encoded with the outgoing schema (consumer.js:128-132)
             original_cols = [
                 c for c in routed.columns
                 if c != "route" and not c.startswith("out_")
             ]
-            for dlq_topic, labels in by_topic.items():
-                if sum(counts.get(label, 0) for label in labels) == 0:
+            for sink, sink_labels in branches:
+                if sum(counts.get(label, 0) for label in sink_labels) == 0:
                     continue
-                sink = dlq_sinks.get(dlq_topic)
-                if sink is None:
-                    raise KeyError(f"no sink bound for DLQ topic {dlq_topic!r}")
                 originals = routed.filter(
-                    F.col("route").isin(labels)
+                    F.col("route").isin(sink_labels)
                 ).select(*original_cols)
                 sink.write_batch(self.encode_dlq(resolved, originals), batch_id)
-            if metrics is not None:
-                metrics.record_batch(counts, resolved.processor_names)
             return counts
         finally:
             routed.unpersist()
@@ -337,10 +495,13 @@ class PipelineRunner:
 
         ``stream_df`` comes from :func:`kafka_source` in production or the
         file-stream harness in tests — the plan is identical either way.
+        Raises ``KeyError`` before the query starts when a DLQ topic of
+        the chain has no sink.
         """
         resolved = self.catalog.resolve(pipeline_id)
         metrics = metrics or PipelineMetrics(str(pipeline_id), self.pod_name)
         dlq_sinks = dlq_sinks or {}
+        self._dlq_branches(resolved, dlq_sinks)
 
         def process_batch(batch_df: DataFrame, batch_id: int) -> None:
             routed = self.routed_frame(resolved, self.decode_source(resolved, batch_df))
@@ -387,6 +548,30 @@ class PipelineRunner:
                 trigger=trigger,
             )
         return queries
+
+
+def _record_cols(cols: list[str], out_prefix: str = "out_") -> list[str]:
+    """The decoded input record's columns among a routed frame's."""
+    return [
+        c for c in cols
+        if c != "route" and not c.startswith("_") and not c.startswith(out_prefix)
+    ]
+
+
+def _original_record(cols: list[str]) -> F.Column:
+    """The ORIGINAL record (consumer.js:100) as one struct column."""
+    return F.struct(*[F.col(c) for c in _record_cols(cols)])
+
+
+def _out_record(cols: list[str], out_prefix: str = "out_") -> F.Column:
+    """The chain's output record, ``out_<field>`` renamed to ``<field>``."""
+    return F.struct(
+        *[
+            F.col(c).alias(c[len(out_prefix):])
+            for c in cols
+            if c.startswith(out_prefix) and not c.startswith(f"{out_prefix}_")
+        ]
+    )
 
 
 def kafka_source(

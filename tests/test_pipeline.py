@@ -7,6 +7,7 @@ drop-convention, python-processor exception capture, catalog resolution.
 
 from __future__ import annotations
 
+import json
 import textwrap
 
 import pytest
@@ -89,6 +90,33 @@ def test_catalog_resolution(catalog):
 
 def _demo_df(spark):
     return spark.createDataFrame(RECORDS, schema=demo_message_schema())
+
+
+def _json_schemas() -> SchemaRegistry:
+    """The wire path's registry: JSON payloads of the demo record."""
+    schemas = SchemaRegistry()
+    schemas.register(
+        SubjectSchema(subject="schema_a", fmt=JSON, spark_schema=demo_message_schema())
+    )
+    return schemas
+
+
+def _wire_df(spark, records):
+    """Kafka-shaped (key, value) frame of JSON-encoded records."""
+    return spark.createDataFrame(
+        [(r["key"], json.dumps(r)) for r in records], "key string, value string"
+    )
+
+
+def _decoded(rows) -> list[tuple]:
+    """(key, num) of each wire row, from its JSON payload."""
+    return sorted((r.key, json.loads(r.value).get("num")) for r in rows)
+
+
+# Runners over both write paths: without a registry the ok rows keep every
+# routed column, so each branch is written on its own; with one, ok and DLQ
+# rows share the (key, value) wire schema and one routed write serves both.
+PATHS = (("branches", None), ("wire", _json_schemas()))
 
 
 def test_expression_chain_routing(spark, catalog, tmp_path):
@@ -456,24 +484,26 @@ def test_jvm_codec_probe_answers_every_format(spark):
 def test_idempotent_sink_replay_does_not_duplicate(spark, catalog, tmp_path):
     """parquet_idempotent: replaying a micro-batch (same batch_id, the
     foreachBatch retry case) overwrites its own output instead of
-    appending — effectively-once on top of the at-least-once contract."""
-    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS)
-    target = Sink("parquet_idempotent", str(tmp_path / "target"))
-    dlq = Sink("parquet_idempotent", str(tmp_path / "dlq"))
-    resolved = catalog.resolve(1)
-    routed = runner.routed_frame(resolved, _demo_df(spark))
+    appending — effectively-once on top of the at-least-once contract.
+    Holds on both write paths."""
+    for path, schemas in PATHS:
+        runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, schemas)
+        target = Sink("parquet_idempotent", str(tmp_path / path / "target"))
+        dlq = Sink("parquet_idempotent", str(tmp_path / path / "dlq"))
+        resolved = catalog.resolve(1)
+        routed = runner.routed_frame(resolved, _demo_df(spark))
 
-    for _ in range(2):  # same batch written twice == retry
+        for _ in range(2):  # same batch written twice == retry
+            runner._write_routed(resolved, routed, target, {"dlq-capitalize": dlq},
+                                 None, batch_id=7)
+        out = spark.read.parquet(target.path_or_topic)
+        assert out.count() == 2, path  # k1, k4 — once, not twice
+        assert spark.read.parquet(dlq.path_or_topic).count() == 1, path  # k3 once
+
+        # a DIFFERENT batch id appends alongside (normal progress)
         runner._write_routed(resolved, routed, target, {"dlq-capitalize": dlq},
-                             None, batch_id=7)
-    out = spark.read.parquet(target.path_or_topic)
-    assert out.count() == 2  # k1, k4 — once, not twice
-    assert spark.read.parquet(dlq.path_or_topic).count() == 1  # k3 once
-
-    # a DIFFERENT batch id appends alongside (normal progress)
-    runner._write_routed(resolved, routed, target, {"dlq-capitalize": dlq},
-                         None, batch_id=8)
-    assert spark.read.parquet(target.path_or_topic).count() == 4
+                             None, batch_id=8)
+        assert spark.read.parquet(target.path_or_topic).count() == 4, path
 
 
 def test_shared_dlq_topic_no_clobber_on_idempotent_replay(spark, tmp_path):
@@ -481,7 +511,8 @@ def test_shared_dlq_topic_no_clobber_on_idempotent_replay(spark, tmp_path):
     an idempotent sink's per-batch directory: the runner unions the
     steps' branches and writes the topic once per micro-batch. (The
     per-step write it replaces aimed both steps at the same batch_id=N
-    directory, where overwrite silently deleted the first step's rows.)"""
+    directory, where overwrite silently deleted the first step's rows.)
+    Holds on both write paths."""
     doc = {
         "topics": [
             {"id": 1, "topic_name": "topic-in"},
@@ -507,9 +538,6 @@ def test_shared_dlq_topic_no_clobber_on_idempotent_replay(spark, tmp_path):
         ],
     }
     catalog = PipelineCatalog.from_dict(doc)
-    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS)
-    target = Sink("parquet_idempotent", str(tmp_path / "target"))
-    dlq = Sink("parquet_idempotent", str(tmp_path / "dlq"))
     resolved = catalog.resolve(1)
     # Both builtin string steps only fail on a null value, which always
     # routes at step 1 — so build the routed frame directly with one row
@@ -524,13 +552,18 @@ def test_shared_dlq_topic_no_clobber_on_idempotent_replay(spark, tmp_path):
         ],
         "key string, value string, num int, route string, out_value string, out_num int",
     )
-    for _ in range(2):  # replay the same micro-batch (retry case)
-        runner._write_routed(
-            resolved, routed, target, {"dlq-shared": dlq}, None, batch_id=3
-        )
-    rows = spark.read.parquet(dlq.path_or_topic).collect()
-    # both steps' originals present exactly once each
-    assert sorted((r.key, r.num) for r in rows) == [("k2", 3), ("k3", 4)]
+    for path, schemas in PATHS:
+        runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, schemas)
+        target = Sink("parquet_idempotent", str(tmp_path / path / "target"))
+        dlq = Sink("parquet_idempotent", str(tmp_path / path / "dlq"))
+        for _ in range(2):  # replay the same micro-batch (retry case)
+            runner._write_routed(
+                resolved, routed, target, {"dlq-shared": dlq}, None, batch_id=3
+            )
+        rows = spark.read.parquet(dlq.path_or_topic).collect()
+        # both steps' originals present exactly once each
+        got = _decoded(rows) if schemas else sorted((r.key, r.num) for r in rows)
+        assert got == [("k2", 3), ("k3", 4)], path
 
 
 def _run_in_job_group(spark, fn):
@@ -562,22 +595,156 @@ def _run_in_job_group(spark, fn):
 
 
 def test_run_batch_job_count(spark, catalog, tmp_path):
-    """One job fills the batch's cache and counts its routes, one writes
-    the ok branch, one each non-empty DLQ topic; none reads a shuffle."""
-    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS)
-    for name, records, want_jobs in (
-        ("with-dlq", RECORDS, 3),
-        ("no-dlq", [r for r in RECORDS if r["value"] is not None], 2),
-    ):
-        df = spark.createDataFrame(records, schema=demo_message_schema())
-        target = Sink("parquet", str(tmp_path / name / "target"))
-        dlq = Sink("parquet", str(tmp_path / name / "dlq"))
+    """Without a registry: one job fills the batch's cache and counts its
+    routes, one writes the ok branch, one each non-empty DLQ topic. On
+    the wire path (a JSON registry) the whole batch is one job, whatever
+    the file sink kind and whether DLQ rows exist. No job reads a
+    shuffle."""
+    no_dlq = [r for r in RECORDS if r["value"] is not None]
+    cases = [
+        ("with-dlq", None, "parquet", RECORDS, 3),
+        ("no-dlq", None, "parquet", no_dlq, 2),
+    ]
+    for kind in ("parquet", "parquet_idempotent", "txn_table"):
+        cases.append((f"wire-{kind}-with-dlq", _json_schemas(), kind, RECORDS, 1))
+        cases.append((f"wire-{kind}-no-dlq", _json_schemas(), kind, no_dlq, 1))
+    for name, schemas, kind, records, want_jobs in cases:
+        runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, schemas)
+        if schemas is None:
+            df = spark.createDataFrame(records, schema=demo_message_schema())
+        else:
+            df = _wire_df(spark, records)
+        target = Sink(kind, str(tmp_path / name / "target"))
+        dlq = Sink(kind, str(tmp_path / name / "dlq"))
         counts, jobs, shuffle_reads = _run_in_job_group(
             spark, lambda: runner.run_batch(1, df, target, {"dlq-capitalize": dlq})
         )
         assert sum(counts.values()) == len(records)
         assert jobs == want_jobs, name
         assert shuffle_reads == [], name
+
+
+def test_unbound_dlq_topic_fails_before_any_write(spark, catalog, tmp_path):
+    """A DLQ topic of the chain with no sink is refused before anything
+    is written or any query starts: failing after the target write would
+    re-append the ok rows to an at-least-once sink on every retry."""
+    from stream_processor_spark.streaming.file_stream import FileBroker
+
+    for path, schemas in PATHS:
+        runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, schemas)
+        target = tmp_path / path / "target"
+        df = _demo_df(spark) if schemas is None else _wire_df(spark, RECORDS)
+        with pytest.raises(KeyError, match="dlq-capitalize"):
+            runner.run_batch(1, df, Sink("parquet", str(target)), {})
+        assert not target.exists(), path
+
+    topic = FileBroker(str(tmp_path / "broker")).topic("topic-in", demo_message_schema())
+    topic.produce(_demo_df(spark))
+    before = len(spark.streams.active)
+    with pytest.raises(KeyError, match="dlq-capitalize"):
+        PipelineRunner(catalog, BUILTIN_PROCESSORS).run_streaming(
+            1,
+            topic.read_stream(spark),
+            Sink("parquet", str(tmp_path / "streamed")),
+            {},
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+    assert len(spark.streams.active) == before
+    assert not (tmp_path / "streamed").exists()
+
+
+def test_wire_replay_of_committed_batch_only_counts(spark, catalog, tmp_path):
+    """Replaying a batch every txn_table sink has committed writes
+    nothing: no new manifest version, the same counts, and one job (the
+    noop count) instead of a write whose observation would never fill."""
+    from stream_processor_spark.operators.txn_table import TxnTable
+
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, _json_schemas())
+    resolved = catalog.resolve(1)
+    target = Sink("txn_table", str(tmp_path / "target"))
+    dlq = Sink("txn_table", str(tmp_path / "dlq"))
+    tables = [TxnTable(spark, s.path_or_topic) for s in (target, dlq)]
+
+    def write():
+        routed = runner.routed_frame(
+            resolved, runner.decode_source(resolved, _wire_df(spark, RECORDS))
+        )
+        return runner._write_routed(
+            resolved, routed, target, {"dlq-capitalize": dlq}, None, batch_id=7
+        )
+
+    first = write()
+    versions = [t.latest_version() for t in tables]
+    again, jobs, shuffle_reads = _run_in_job_group(spark, write)
+    assert again == first == {"ok": 2, "dropped": 1, "dlq_capitalize": 1}
+    assert [t.latest_version() for t in tables] == versions
+    assert (jobs, shuffle_reads) == (1, [])
+    assert _decoded(tables[0].read().collect()) == [("k1", 12), ("k4", 18)]
+    assert _decoded(tables[1].read().collect()) == [("k3", 4)]
+
+
+def test_wire_partial_replay_writes_only_missing_sinks(spark, catalog, tmp_path):
+    """Batch 7 into target T and DLQ D1, then again into T and a fresh
+    D2: T has the batch already and stays as it was; D2 gets the DLQ rows
+    once."""
+    from stream_processor_spark.operators.txn_table import TxnTable
+
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, _json_schemas())
+    resolved = catalog.resolve(1)
+    target = Sink("txn_table", str(tmp_path / "T"))
+    for dlq_name in ("D1", "D2"):
+        routed = runner.routed_frame(
+            resolved, runner.decode_source(resolved, _wire_df(spark, RECORDS))
+        )
+        dlq = Sink("txn_table", str(tmp_path / dlq_name))
+        runner._write_routed(
+            resolved, routed, target, {"dlq-capitalize": dlq}, None, batch_id=7
+        )
+        if dlq_name == "D1":
+            snap = TxnTable(spark, target.path_or_topic).snapshot()
+    t = TxnTable(spark, target.path_or_topic)
+    assert t.snapshot() == snap
+    assert _decoded(t.read().collect()) == [("k1", 12), ("k4", 18)]
+    d2 = TxnTable(spark, str(tmp_path / "D2"))
+    assert _decoded(d2.read().collect()) == [("k3", 4)]
+    assert d2.committed_txns() == {"batch-7"}
+
+
+def test_wire_replay_removes_leftover_staging(spark, catalog, tmp_path):
+    """A crashed attempt's ``_staging/batch-7`` (here: a junk parquet
+    file) is invisible to readers of the sink and is deleted by the
+    replay of batch 7, for a parquet and a txn_table target."""
+    from stream_processor_spark.operators.txn_table import TxnTable
+
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, _json_schemas())
+    resolved = catalog.resolve(1)
+    batch6 = [r for r in RECORDS if r["key"] == "k1"]
+    for kind in ("parquet", "txn_table"):
+        root = tmp_path / kind / "target"
+        target = Sink(kind, str(root))
+        dlq = Sink(kind, str(tmp_path / kind / "dlq"))
+
+        def write(records, batch_id):
+            routed = runner.routed_frame(
+                resolved, runner.decode_source(resolved, _wire_df(spark, records))
+            )
+            runner._write_routed(
+                resolved, routed, target, {"dlq-capitalize": dlq}, None,
+                batch_id=batch_id,
+            )
+
+        def read():
+            if kind == "parquet":
+                return _decoded(spark.read.parquet(str(root)).collect())
+            return _decoded(TxnTable(spark, str(root)).read().collect())
+
+        write(batch6, 6)
+        junk = root / "_staging" / "batch-7" / "dest=0"
+        spark.range(3).toDF("junk").write.parquet(str(junk))
+        assert read() == [("k1", 12)], kind  # the leftover is never read
+        write(RECORDS, 7)
+        assert not (root / "_staging" / "batch-7").exists(), kind
+        assert read() == [("k1", 12), ("k1", 12), ("k4", 18)], kind
 
 
 def test_route_counts_cover_every_row(spark, catalog, tmp_path):

@@ -88,6 +88,22 @@ def test_txn_id_replay_is_noop(spark, tmp_path):
     assert t.read().count() == 3
 
 
+def test_append_dir_moves_files_in_and_replays_once(spark, tmp_path):
+    """append_dir publishes parquet files another job wrote, by renaming
+    their directory under data/; replaying its txn_id commits nothing
+    and leaves none of the replay's files visible."""
+    t = TxnTable(spark, str(tmp_path / "t"))
+    for attempt in ("first", "replay"):
+        src = str(tmp_path / "staged" / attempt)
+        _df(spark, [(1, attempt)]).write.parquet(src)
+        v = t.append_dir(src, txn_id="batch-3")
+        assert v == (0 if attempt == "first" else None)
+        assert not (tmp_path / "staged" / attempt).exists()
+    assert t.latest_version() == 0
+    assert [(r.k, r.v) for r in t.read().collect()] == [(1, "first")]
+    assert all(f.startswith(f"file:{t.data_dir}/txn-") for f in t.snapshot()["files"])
+
+
 def test_concurrent_commit_race_rebases_not_clobbers(spark, tmp_path):
     """Two writers race from the same parent snapshot: the loser's
     commit rename fails (destination version exists), and the retry
@@ -263,6 +279,64 @@ def test_streaming_pipeline_into_txn_table_checkpoint_resume(spark, tmp_path):
     ]
     # each processed micro-batch committed exactly one txn
     assert sorted(t.committed_txns()) == ["batch-0", "batch-1"]
+
+
+@pytest.mark.slow
+def test_streaming_wire_pipeline_into_txn_table_checkpoint_resume(spark, tmp_path):
+    """The same checkpointed resume on the wire path (JSON payloads
+    through a SchemaRegistry), where each micro-batch is one routed write
+    published to both tables: decoded target and DLQ rows exactly once,
+    and one target commit per processed micro-batch."""
+    import json
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from tests.test_pipeline import CATALOG_DOC, RECORDS, _decoded, _json_schemas
+
+    from stream_processor_spark.pipeline.catalog import PipelineCatalog
+    from stream_processor_spark.pipeline.processors import BUILTIN_PROCESSORS
+    from stream_processor_spark.pipeline.runner import PipelineRunner, Sink
+    from stream_processor_spark.streaming.file_stream import FileBroker
+
+    runner = PipelineRunner(
+        PipelineCatalog.from_dict(CATALOG_DOC), BUILTIN_PROCESSORS, _json_schemas()
+    )
+    broker = FileBroker(str(tmp_path / "broker"))
+    topic = broker.topic(
+        "topic-in",
+        StructType([StructField("key", StringType()), StructField("value", StringType())]),
+    )
+    ckpt = broker.checkpoint_dir()
+    target = Sink("txn_table", str(tmp_path / "target"))
+    dlq = Sink("txn_table", str(tmp_path / "dlq"))
+
+    def run(records):
+        topic.produce_rows(
+            spark, [{"key": r["key"], "value": json.dumps(r)} for r in records]
+        )
+        q = runner.run_streaming(
+            1, topic.read_stream(spark), target, {"dlq-capitalize": dlq},
+            checkpoint_dir=ckpt,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    run(RECORDS)
+    t, d = TxnTable(spark, target.path_or_topic), TxnTable(spark, dlq.path_or_topic)
+    assert _decoded(t.read().collect()) == [("k1", 12), ("k4", 18)]
+
+    run([{"key": "k5", "value": "more", "num": 20}])
+    rows = t.read().collect()
+    assert sorted(json.loads(r.value)["value"] for r in rows) == [
+        "HELLO_appended", "MORE_appended", "SPARK_appended",
+    ]
+    assert _decoded(rows) == [("k1", 12), ("k4", 18), ("k5", 30)]
+    # the DLQ holds the ORIGINAL record once (to_json omits the null value)
+    assert [(r.key, json.loads(r.value)) for r in d.read().collect()] == [
+        ("k3", {"key": "k3", "num": 4})
+    ]
+    assert sorted(t.committed_txns()) == ["batch-0", "batch-1"]
+    assert d.committed_txns() == {"batch-0"}
 
 
 def test_vacuum_grace_protects_live_writer(spark, tmp_path):
