@@ -13,7 +13,8 @@ plumbing) designed for 100 TB scale.
 Design stance (see docs/SCALE.md):
 - DataFrame/SQL first: every operator is a declarative Catalyst plan;
   Python UDFs only where expressions cannot express the semantics, and
-  then always Arrow-vectorized (pandas_udf / mapInPandas).
+  then always Arrow-batched (pandas_udf / mapInPandas, or arrow_udf /
+  mapInArrow where values must stay exact, as at the pipeline boundary).
 - No driver-side collect() in any operator path.
 - Broadcast small dimensions, pre-aggregate before shuffles, AQE on.
 """

@@ -32,9 +32,9 @@ plan alone, so callers count and split routes without reading the data.
 
 For *unanticipated* failures (arbitrary Python processors), see
 ``stream_processor_spark.pipeline.processors.ProcessorRegistry.
-apply_python_chain`` which captures exceptions inside an Arrow-vectorized
-``mapInPandas`` pass and emits the same route column — failures become
-data, not task aborts.
+apply_python_chain`` which captures exceptions inside one ``mapInArrow``
+pass and emits the same route column — failures become data, not task
+aborts.
 """
 
 from __future__ import annotations

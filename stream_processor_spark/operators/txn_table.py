@@ -69,8 +69,7 @@ class HadoopFS:
     table works on any Spark-supported filesystem, not just file://."""
 
     def __init__(self, spark: SparkSession, root: str):
-        self._jvm = spark._jvm
-        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path
         self._fs = self._Path(root).getFileSystem(
             spark._jsc.hadoopConfiguration()
         )
@@ -127,15 +126,7 @@ class HadoopFS:
     def read_text(self, p: str) -> str:
         stream = self._fs.open(self.path(p))
         try:
-            reader = self._jvm.java.io.BufferedReader(
-                self._jvm.java.io.InputStreamReader(stream, "UTF-8")
-            )
-            chunks = []
-            line = reader.readLine()
-            while line is not None:
-                chunks.append(line)
-                line = reader.readLine()
-            return "\n".join(chunks)
+            return bytes(stream.readAllBytes()).decode("utf-8")
         finally:
             stream.close()
 

@@ -14,21 +14,26 @@ plan-time constant here).
 
 Avro/Protobuf prefer their JVM Spark packages (codegen-resident, no
 Python round-trip) and fall back to the vendored pure-Python wire codecs
-(``avro_py``/``proto_py``, Arrow-batched pandas_udfs) when the packages
-are absent — so every wire format is executable and tested in any
-environment, matching the reference which exercises all three formats
-end-to-end (SURVEY.md §1.2). The JVM path is probed once per session.
+(``avro_py``/``proto_py``, one per-record ``arrow_udf`` each) when the
+packages are absent — so every wire format is executable and tested in
+any environment, matching the reference which exercises all three
+formats end-to-end (SURVEY.md §1.2). The JVM path is probed once per
+session.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import BinaryType, DataType, StructType
+
+from stream_processor_spark.pipeline import avro_py, proto_py
 
 JSON = "json"
 AVRO = "avro"
@@ -203,16 +208,6 @@ class SchemaRegistry:
             return enc
         return F.concat(F.lit(wire_header(s.schema_id)), enc.cast("binary"))
 
-    def encodes_in_jvm(self, subject: str) -> bool:
-        """True when :meth:`encode` compiles to a JVM expression; False
-        when it runs the vendored pure-Python codec in a pandas_udf."""
-        s = self.get(subject)
-        if s.fmt == AVRO:
-            return jvm_codec_available(AVRO)
-        if s.fmt == PROTOBUF:
-            return s.proto_descriptor is not None and jvm_codec_available(PROTOBUF)
-        return s.fmt == JSON
-
     def _decode_payload(self, s: SubjectSchema, value: Column) -> Column:
         if s.fmt == JSON:
             return F.from_json(value.cast("string"), s.spark_schema, s.options)
@@ -225,14 +220,20 @@ class SchemaRegistry:
                 # streaming query on every restart.
                 opts = {"mode": "PERMISSIVE", **s.options}
                 return _avro()[0](value, s.avro_json, opts)
-            return _py_avro_decode(s, value)
+            schema = avro_py.parse_schema(s.avro_json)
+            return _per_record(lambda b: avro_py.decode(b, schema), s.spark_schema)(
+                value.cast("binary")
+            )
         if s.fmt == PROTOBUF:
             if s.proto_descriptor is not None and jvm_codec_available(PROTOBUF):
                 from_protobuf = _protobuf()[0]
                 opts = {"mode": "PERMISSIVE", **s.options}
                 return from_protobuf(value, s.proto_message, s.proto_descriptor, opts)
             if s.proto_spec is not None:
-                return _py_proto_decode(s, value)
+                spec = s.proto_spec
+                return _per_record(lambda b: proto_py.decode(b, spec), s.spark_schema)(
+                    value.cast("binary")
+                )
             _protobuf()  # raises the actionable --packages error
         raise ValueError(f"unknown format {s.fmt!r}")
 
@@ -240,15 +241,17 @@ class SchemaRegistry:
         if s.fmt == JSON:
             return F.to_json(record, s.options)
         if s.fmt == AVRO:
-            if self.encodes_in_jvm(s.subject):
+            if jvm_codec_available(AVRO):
                 return _avro()[1](record, s.avro_json)
-            return _py_avro_encode(s, record)
+            schema = avro_py.parse_schema(s.avro_json)
+            return _per_record(lambda r: avro_py.encode(r, schema), BinaryType())(record)
         if s.fmt == PROTOBUF:
-            if self.encodes_in_jvm(s.subject):
+            if s.proto_descriptor is not None and jvm_codec_available(PROTOBUF):
                 to_protobuf = _protobuf()[1]
                 return to_protobuf(record, s.proto_message, s.proto_descriptor, s.options)
             if s.proto_spec is not None:
-                return _py_proto_encode(s, record)
+                spec = s.proto_spec
+                return _per_record(lambda r: proto_py.encode(r, spec), BinaryType())(record)
             _protobuf()
         raise ValueError(f"unknown format {s.fmt!r}")
 
@@ -301,7 +304,7 @@ def jvm_codec_available(fmt: str) -> bool:
     return _JVM_CODEC_OK[cache_key]
 
 
-# -- pure-Python wire-codec fallbacks (Arrow-batched pandas_udfs) ----------
+# -- pure-Python wire-codec fallbacks --------------------------------------
 #
 # Used when the JVM package is absent. Scale note: these move payload
 # bytes through one Python round-trip per batch — fine for local dev and
@@ -309,103 +312,26 @@ def jvm_codec_available(fmt: str) -> bool:
 # codec work inside codegen. The engine picks automatically.
 
 
-def _py_avro_decode(s: SubjectSchema, value: Column) -> Column:
-    from pyspark.sql.functions import pandas_udf
+def _per_record(
+    fn: Callable[[object], object], return_type: DataType
+) -> Callable[[Column], Column]:
+    """An ``arrow_udf`` mapping ``fn`` over each non-NULL value of a
+    column, as ``Array.to_pylist()`` gives it (bytes, or a record dict
+    with exact ints and ``None``). A value ``fn`` raises on becomes NULL:
+    one undecodable payload or unencodable record fails per message
+    (consumer.js:142-145), never the task."""
+    arrow_type = to_arrow_type(return_type)
 
-    from stream_processor_spark.pipeline import avro_py
-
-    avro_schema = avro_py.parse_schema(s.avro_json)
-    names = [f.name for f in s.spark_schema.fields]
-
-    @pandas_udf(s.spark_schema)
-    def dec(v: pd.Series) -> pd.DataFrame:
-        rows = []
-        for payload in v:
-            if payload is None:
-                rows.append({n: None for n in names})
-                continue
-            try:
-                r = avro_py.decode(bytes(payload), avro_schema)
-                rows.append({n: r.get(n) for n in names})
-            except Exception:
-                # undecodable payload → NULL record (per-message failure,
-                # consumer.js:142-145), never a task abort
-                rows.append({n: None for n in names})
-        return pd.DataFrame(rows, columns=names)
-
-    return dec(value.cast("binary"))
-
-
-def _py_avro_encode(s: SubjectSchema, record: Column) -> Column:
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    from stream_processor_spark.pipeline import avro_py
-
-    avro_schema = avro_py.parse_schema(s.avro_json)
-
-    @pandas_udf(BinaryType())
-    def enc(df: pd.DataFrame) -> pd.Series:
-        clean = df.astype(object).where(df.notna(), None)
+    def per_record(values: pa.Array) -> pa.Array:
         out = []
-        for row in clean.to_dict("records"):
-            # per-record containment, mirroring the decode side: a record
-            # the schema cannot encode (e.g. null in a non-nullable
-            # field) becomes a NULL wire value, never a task abort
+        for v in values.to_pylist():
             try:
-                out.append(avro_py.encode(row, avro_schema))
+                out.append(None if v is None else fn(v))
             except Exception:
                 out.append(None)
-        return pd.Series(out)
+        return pa.array(out, type=arrow_type)
 
-    return enc(record)
-
-
-def _py_proto_decode(s: SubjectSchema, value: Column) -> Column:
-    from pyspark.sql.functions import pandas_udf
-
-    spec = s.proto_spec
-    names = [f.name for f in s.spark_schema.fields]
-
-    @pandas_udf(s.spark_schema)
-    def dec(v: pd.Series) -> pd.DataFrame:
-        from stream_processor_spark.pipeline import proto_py
-
-        rows = []
-        for payload in v:
-            if payload is None:
-                rows.append({n: None for n in names})
-                continue
-            try:
-                r = proto_py.decode(bytes(payload), spec)
-                rows.append({n: r.get(n) for n in names})
-            except Exception:
-                rows.append({n: None for n in names})
-        return pd.DataFrame(rows, columns=names)
-
-    return dec(value.cast("binary"))
-
-
-def _py_proto_encode(s: SubjectSchema, record: Column) -> Column:
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    spec = s.proto_spec
-
-    @pandas_udf(BinaryType())
-    def enc(df: pd.DataFrame) -> pd.Series:
-        from stream_processor_spark.pipeline import proto_py
-
-        clean = df.astype(object).where(df.notna(), None)
-        out = []
-        for row in clean.to_dict("records"):
-            try:
-                out.append(proto_py.encode(row, spec))
-            except Exception:
-                out.append(None)  # per-record containment (see avro enc)
-        return pd.Series(out)
-
-    return enc(record)
+    return F.arrow_udf(per_record, return_type)
 
 
 def _avro():

@@ -16,10 +16,12 @@ Engine model — two processor kinds, fastest-first:
    as builtins.
 2. **Python processors**: an arbitrary ``dict -> dict | None`` record
    function (the reference's actual contract). Chains of these run inside
-   ONE Arrow-batched ``mapInPandas`` pass that applies the whole chain
-   per record, catches exceptions, and emits the same ``route`` column the
-   expression path produces — failures become data, not task aborts
-   (SURVEY.md §4 custom item 2). Python-processor chains cost one
+   ONE ``mapInArrow`` pass that applies the whole chain per record, catches
+   exceptions, and emits the same ``route`` column the expression path
+   produces — failures become data, not task aborts (SURVEY.md §4 custom
+   item 2). Records come from ``RecordBatch.to_pylist()``, so processors
+   see exact ints, ``None`` and ``datetime``, and the input columns leave
+   as the untouched Arrow arrays. Python-processor chains cost one
    JVM→Python round-trip per batch regardless of chain length.
 
 Dynamic discovery mirrors pull_processors.js: ``discover_directory`` scans
@@ -35,7 +37,7 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 from numbers import Integral, Real
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 
@@ -200,9 +202,11 @@ class ProcessorRegistry:
           ENDING in None routes ``dropped`` (consumer.js:88-109,134-137);
         - all steps pass → route ``ok`` with transformed out_* columns.
 
-        Records are delivered to processors with real ``None`` for SQL
-        NULLs (never pandas NaN) and integral fields as ``int`` (never a
-        float, whatever else the batch holds), matching the JS contract.
+        Records are delivered to processors exactly as Spark holds them:
+        ``None`` for SQL NULLs and every integral field an exact ``int``,
+        whatever else the batch holds, matching the JS contract. The input
+        columns pass through as the batch's own Arrow arrays, so a DLQ's
+        ORIGINAL record is the input, bit for bit.
         """
         procs = [self.get(n) for n in names]
         for p in procs:
@@ -215,7 +219,7 @@ class ProcessorRegistry:
         ]
         in_cols = df.columns
         out_dtypes = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        int_cols = [c for c in in_cols if out_dtypes[c] in _INT_TYPES]
+        out_names = [*in_cols, "route", *(f"{out_prefix}{c}" for c in in_cols)]
         out_schema_fields = ", ".join(
             [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
             + ["route string"]
@@ -225,21 +229,11 @@ class ProcessorRegistry:
             ]
         )
 
-        def run_chain(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
+        def run_chain(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for rb in batches:
                 routes, outs = [], []
-                # NaN/NaT → None so processors see the JS null contract
-                clean = pdf.astype(object).where(pdf.notna(), None)
-                # Arrow hands pandas an int column holding a null as
-                # float64: give processors ints whatever the batch holds
-                for c in int_cols:
-                    clean[c] = pd.Series(
-                        [None if v is None else int(v) for v in clean[c]],
-                        index=clean.index,
-                        dtype=object,
-                    )
-                for rec in clean.to_dict("records"):
-                    route, cur = ROUTE_OK, dict(rec)
+                for rec in rb.to_pylist():
+                    route, cur = ROUTE_OK, rec
                     for fn, label in chain:
                         if cur is None:
                             # reference: processor derefs the null message
@@ -267,15 +261,19 @@ class ProcessorRegistry:
                             cur = coerced
                     routes.append(route)
                     outs.append(cur if route == ROUTE_OK else None)
-                out = pdf.copy()
-                out["route"] = routes
-                for c in in_cols:
-                    out[f"{out_prefix}{c}"] = [
-                        (o.get(c) if o is not None else None) for o in outs
-                    ]
-                yield out
+                out_cols = [
+                    pa.array(
+                        [None if o is None else o[c] for o in outs],
+                        type=rb.schema.field(i).type,
+                    )
+                    for i, c in enumerate(in_cols)
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    [*rb.columns, pa.array(routes, pa.string()), *out_cols],
+                    names=out_names,
+                )
 
-        return df.mapInPandas(run_chain, schema=out_schema_fields)
+        return df.mapInArrow(run_chain, schema=out_schema_fields)
 
 
 # ---------------------------------------------------------------- builtins ----

@@ -17,19 +17,20 @@ Semantics parity:
   path);
 - dropped (filter) records are counted, not written (consumer.js:134-137).
 
-Scale notes: on the wire path (a runner with a ``SchemaRegistry`` whose
-outgoing encoder runs in the JVM, every sink a file kind on one Hadoop
-filesystem) a micro-batch is ONE Spark job, as the reference produces a
-batch's target and DLQ messages in one send (consumer.js:128-149). The
-routed frame carries a route-count observation, is encoded to
-``(key, value, dest)`` and written once with ``partitionBy("dest")`` into
-``<target root>/_staging/batch-<id>``; the driver then moves each
-``dest`` directory into its sink by rename and commits it. Elsewhere (no
-registry: ok rows keep every routed column; a pandas encoder; kafka/noop
-sinks; sinks on different filesystems) one observed ``noop`` write fills
-the batch's cache and counts every route, then each route branch filters
-the cached frame: one job to fill and count, one for the ok write and
-one per non-empty DLQ topic. Neither path shuffles.
+Scale notes: on the wire path (a runner with a ``SchemaRegistry``, every
+sink a file kind on one Hadoop filesystem) a micro-batch is ONE Spark
+job, as the reference produces a batch's target and DLQ messages in one
+send (consumer.js:128-149). The routed frame carries a route-count
+observation, is encoded to ``(key, value, dest)`` and written once with
+``partitionBy("dest")`` into ``<target root>/_staging/batch-<id>``; the
+driver then moves each ``dest`` directory into its sink by rename and
+commits it. The encoder may be a JVM expression or a pure-Python codec
+(an ``arrow_udf``, exact per record). Elsewhere (no registry: ok rows
+keep every routed column; kafka/noop sinks; sinks on different
+filesystems) one observed ``noop`` write fills the batch's cache and
+counts every route, then each route branch filters the cached frame:
+one job to fill and count, one for the ok write and one per non-empty
+DLQ topic. Neither path shuffles.
 Kafka sinks are plan-built but need a broker — the file/parquet sinks give
 the same multi-sink semantics for local verification.
 """
@@ -349,7 +350,7 @@ class PipelineRunner:
         branches = self._dlq_branches(resolved, dlq_sinks)
         labels = route_labels(resolved.processor_names, resolved.dlq_topics)
         sinks = [target_sink] + [sink for sink, _ in branches]
-        if self._one_write_serves(resolved, routed.sparkSession, sinks):
+        if self._one_write_serves(routed.sparkSession, sinks):
             counts = self._write_staged(
                 resolved, routed, target_sink, branches, labels, batch_id
             )
@@ -361,18 +362,13 @@ class PipelineRunner:
             metrics.record_batch(counts, resolved.processor_names)
         return counts
 
-    def _one_write_serves(
-        self, resolved: ResolvedPipeline, spark: SparkSession, sinks: list[Sink]
-    ) -> bool:
+    def _one_write_serves(self, spark: SparkSession, sinks: list[Sink]) -> bool:
         """Can one partitioned parquet write feed every sink? It needs ok
-        and DLQ rows in one ``(key, value)`` wire schema (a registry), an
-        outgoing encoder in the JVM (a pandas encoder fed both branches
-        would take their rows in one Arrow batch, where a null int in a
-        DLQ record turns the ok records' ints to floats), sinks that
-        accept a staged directory, and one filesystem for the renames."""
+        and DLQ rows in one ``(key, value)`` wire schema (a registry),
+        sinks that accept a staged directory, and one filesystem for the
+        renames."""
         return (
             self.schemas is not None
-            and self.schemas.encodes_in_jvm(resolved.outgoing_schema)
             and all(s.kind in FILE_SINKS for s in sinks)
             and len({HadoopFS(spark, s.path_or_topic).uri() for s in sinks}) == 1
         )

@@ -545,7 +545,7 @@ def test_short_text_ngrams_and_shingles_safe(spark):
 
 def test_avro_encode_null_non_nullable_contained(spark):
     """A null in a non-nullable avro field must neither stringify to
-    'None' nor abort the task: avro_py raises, and the encode pandas_udf
+    'None' nor abort the task: avro_py raises, and the encode arrow_udf
     contains it per record as a NULL wire value."""
     import pytest as _pytest
 

@@ -13,6 +13,7 @@ import textwrap
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from stream_processor_spark.pipeline.catalog import PipelineCatalog
 from stream_processor_spark.pipeline.codecs import (
@@ -70,6 +71,9 @@ RECORDS = [
     {"key": "k3", "value": None, "num": 4},      # dlq_capitalize (null value)
     {"key": "k4", "value": "spark", "num": 8},   # ok: SPARK_appended, 18 even
 ]
+
+# the smallest int a float64 cannot hold: a pandas step turns it into 2**53
+BIG = 2**53 + 1
 
 
 @pytest.fixture()
@@ -242,15 +246,24 @@ def test_python_chain_wrong_typed_output_routes_not_crashes(spark):
 
 
 def test_python_chain_sees_ints_whatever_the_batch_holds(spark):
-    """Arrow hands pandas an int column holding a null as float64; a
-    processor must still get ``5``, not ``5.0``, whether or not a
-    null-``num`` row shares its batch."""
+    """A processor gets every int exactly (``5``, never ``5.0``; 2**53 + 1
+    with all its digits) whether or not a null shares its Arrow batch, and
+    the input columns leave the chain unchanged: the DLQ's ORIGINAL record
+    of a step that raises keeps the exact value too."""
+    from stream_processor_spark.operators.dlq import ROUTE_OK
     from stream_processor_spark.pipeline.processors import Processor
+
+    def boom(r):
+        if r["key"] == "a":
+            raise ValueError("boom")
+        return r
 
     reg = ProcessorRegistry()
     reg.register(
         Processor(name="show", record_fn=lambda r: {**r, "value": f"n={r['num']}"})
     )
+    reg.register(Processor(name="identity", record_fn=dict))
+    reg.register(Processor(name="boom", record_fn=boom))
     schema = demo_message_schema()
     alone = spark.createDataFrame([("a", "x", 5)], schema)
     # one partition, so both rows share one Arrow batch
@@ -260,6 +273,16 @@ def test_python_chain_sees_ints_whatever_the_batch_holds(spark):
         got = {r.key: r.out_value for r in routed.collect()}
         assert got["a"] == "n=5"
     assert got["b"] == "n=None"
+
+    wide = spark.createDataFrame(
+        [("a", "x", BIG), ("b", "y", None)], "key string, value string, num bigint"
+    ).coalesce(1)
+    routed = reg.apply_python_chain(wide, ["identity"], [None])
+    got = {r.key: (r.route, r.num, r.out_num) for r in routed.collect()}
+    assert got == {"a": (ROUTE_OK, BIG, BIG), "b": (ROUTE_OK, None, None)}
+    routed = reg.apply_python_chain(wide, ["boom"], ["dlq-boom"])
+    got = {r.key: (r.route, r.num, r.out_num) for r in routed.collect()}
+    assert got == {"a": ("dlq_boom", BIG, None), "b": (ROUTE_OK, None, None)}
 
 
 def test_catalog_from_jdbc_roundtrip(spark, catalog, tmp_path):
@@ -395,6 +418,31 @@ DEMO_AVRO_JSON = """
 """
 
 
+def _avro_schemas() -> SchemaRegistry:
+    """A registry whose demo subject is Avro: the vendored Python codec
+    when spark-avro is absent."""
+    return SchemaRegistry(
+        {
+            "schema_a": SubjectSchema(
+                subject="schema_a",
+                fmt="avro",
+                spark_schema=demo_message_schema(),
+                avro_json=DEMO_AVRO_JSON,
+            )
+        }
+    )
+
+
+def _avro_wire_df(spark, records):
+    """Kafka-shaped (key, value) frame of Avro-encoded records."""
+    from stream_processor_spark.pipeline import avro_py
+
+    return spark.createDataFrame(
+        [(r["key"], avro_py.encode(r, DEMO_AVRO_JSON)) for r in records],
+        "key string, value binary",
+    )
+
+
 def test_avro_wire_roundtrip_framed(spark, catalog):
     """Avro wire format end-to-end — the reference's producer_b path
     (producer_b.js:42 encodes Avro through the registry, so payloads are
@@ -469,6 +517,68 @@ def test_protobuf_wire_roundtrip(spark, catalog):
     assert proto_py.decode(raw, spec) == {
         "key": "k1", "value": "HI_appended", "num": 14,
     }
+
+
+def _assert_bigint_roundtrip(spark, subject: SubjectSchema, encode, decode):
+    """Decode ``subject``'s payloads of a 2**53 + 1 record, a null-num
+    record and a NULL payload, sharing one Arrow batch, then encode the
+    decoded records: the big value survives both directions with all its
+    digits."""
+    schemas = SchemaRegistry({subject.subject: subject})
+    recs = [{"key": "a", "value": "x", "num": BIG}, {"key": "b", "value": "y", "num": None}]
+    wire = spark.createDataFrame(
+        [(encode(r),) for r in recs] + [(None,)], "value binary"
+    ).coalesce(1)
+    decoded = wire.select(schemas.decode(subject.subject, F.col("value")).alias("r"))
+    got = {r.r.key: r.r.num for r in decoded.collect() if r.r is not None}
+    assert got["a"] == BIG
+    encoded = decoded.select(schemas.encode(subject.subject, F.col("r")).alias("v"))
+    back = {
+        d["key"]: d
+        for d in (decode(bytes(r.v)) for r in encoded.collect() if r.v is not None)
+    }
+    assert back["a"] == recs[0]
+
+
+def test_avro_wire_roundtrip_keeps_bigint_exact(spark):
+    from stream_processor_spark.pipeline import avro_py
+
+    avro_json = DEMO_AVRO_JSON.replace('["null", "int"]', '["null", "long"]')
+    _assert_bigint_roundtrip(
+        spark,
+        SubjectSchema(
+            subject="wide",
+            fmt="avro",
+            spark_schema=StructType.fromDDL("key string, value string, num bigint"),
+            avro_json=avro_json,
+        ),
+        lambda r: avro_py.encode(r, avro_json),
+        lambda b: avro_py.decode(b, avro_json),
+    )
+
+
+def test_protobuf_wire_roundtrip_keeps_bigint_exact(spark):
+    from stream_processor_spark.pipeline import proto_py
+
+    spec = proto_py.ProtoMessageSpec(
+        name="Wide",
+        fields=(
+            proto_py.ProtoField(1, "key", "string"),
+            proto_py.ProtoField(2, "value", "string"),
+            proto_py.ProtoField(3, "num", "int64"),
+        ),
+    )
+    _assert_bigint_roundtrip(
+        spark,
+        SubjectSchema(
+            subject="wide",
+            fmt="protobuf",
+            spark_schema=StructType.fromDDL("key string, value string, num bigint"),
+            proto_spec=spec,
+        ),
+        lambda r: proto_py.encode(r, spec),
+        lambda b: proto_py.decode(b, spec),
+    )
 
 
 def test_jvm_codec_probe_answers_every_format(spark):
@@ -597,9 +707,9 @@ def _run_in_job_group(spark, fn):
 def test_run_batch_job_count(spark, catalog, tmp_path):
     """Without a registry: one job fills the batch's cache and counts its
     routes, one writes the ok branch, one each non-empty DLQ topic. On
-    the wire path (a JSON registry) the whole batch is one job, whatever
-    the file sink kind and whether DLQ rows exist. No job reads a
-    shuffle."""
+    the wire path (a JSON registry, or an Avro one whose codec may run in
+    Python) the whole batch is one job, whatever the file sink kind and
+    whether DLQ rows exist. No job reads a shuffle."""
     no_dlq = [r for r in RECORDS if r["value"] is not None]
     cases = [
         ("with-dlq", None, "parquet", RECORDS, 3),
@@ -608,10 +718,13 @@ def test_run_batch_job_count(spark, catalog, tmp_path):
     for kind in ("parquet", "parquet_idempotent", "txn_table"):
         cases.append((f"wire-{kind}-with-dlq", _json_schemas(), kind, RECORDS, 1))
         cases.append((f"wire-{kind}-no-dlq", _json_schemas(), kind, no_dlq, 1))
+    cases.append(("wire-avro-txn_table-with-dlq", _avro_schemas(), "txn_table", RECORDS, 1))
     for name, schemas, kind, records, want_jobs in cases:
         runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, schemas)
         if schemas is None:
             df = spark.createDataFrame(records, schema=demo_message_schema())
+        elif schemas.get("schema_a").fmt == "avro":
+            df = _avro_wire_df(spark, records)
         else:
             df = _wire_df(spark, records)
         target = Sink(kind, str(tmp_path / name / "target"))
@@ -622,6 +735,38 @@ def test_run_batch_job_count(spark, catalog, tmp_path):
         assert sum(counts.values()) == len(records)
         assert jobs == want_jobs, name
         assert shuffle_reads == [], name
+
+
+def test_python_codec_encodes_ok_and_dlq_rows_of_one_batch(spark, catalog, tmp_path):
+    """An ok row and DLQ rows with and without a null ``num`` share one
+    Arrow batch of the one-write path: every payload is written and
+    decodes back to its exact record (the chain's output for the ok row,
+    the ORIGINAL record for each DLQ row)."""
+    from stream_processor_spark.pipeline import avro_py
+
+    records = [
+        {"key": "k1", "value": "hello", "num": 2},
+        {"key": "k3", "value": None, "num": None},
+        {"key": "k5", "value": None, "num": 4},
+    ]
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, _avro_schemas())
+    target = Sink("parquet", str(tmp_path / "target"))
+    dlq = Sink("parquet", str(tmp_path / "dlq"))
+    counts = runner.run_batch(
+        1, _avro_wire_df(spark, records).coalesce(1), target, {"dlq-capitalize": dlq}
+    )
+    assert counts == {"ok": 1, "dlq_capitalize": 2}
+
+    def payloads(sink):
+        rows = spark.read.parquet(sink.path_or_topic).collect()
+        assert all(r.value is not None for r in rows)
+        return sorted(
+            (avro_py.decode(bytes(r.value), DEMO_AVRO_JSON) for r in rows),
+            key=lambda d: d["key"],
+        )
+
+    assert payloads(target) == [{"key": "k1", "value": "HELLO_appended", "num": 12}]
+    assert payloads(dlq) == records[1:]
 
 
 def test_unbound_dlq_topic_fails_before_any_write(spark, catalog, tmp_path):
