@@ -208,35 +208,44 @@ def _fmt(x: float) -> str:
     return str(int(x)) if float(x).is_integer() else repr(x)
 
 
-def observe_routes(
-    routed_df: DataFrame, labels: list[str]
-) -> tuple[DataFrame, Callable[[], dict[str, int]]]:
-    """Attach per-route counts to a routed micro-batch. Returns the
-    observed frame and a function that, once one action over that frame
-    has run, gives the non-zero counts. Filter the observed frame, not
-    its input, so every route is counted. ``labels`` must hold every
-    route the chain can emit (:func:`operators.dlq.route_labels`). Sums
-    are aliased by index, since processor names need not be valid
-    identifiers."""
-    obs = Observation()
-    route = F.col("route")
-    sums = [
-        F.sum((route == label).cast("long")).alias(str(i))
-        for i, label in enumerate(labels)
-    ]
+class RouteCounter:
+    """Per-route count aggregates of one chain, built once and observed
+    on any number of micro-batches. ``labels`` must hold every route the
+    chain can emit (:func:`operators.dlq.route_labels`). Sums are aliased
+    by index, since processor names need not be valid identifiers."""
 
-    def counts() -> dict[str, int]:
-        got = obs.get
-        return {label: got[str(i)] for i, label in enumerate(labels) if got[str(i)]}
+    def __init__(self, labels: list[str]):
+        self.labels = labels
+        route = F.col("route")
+        self._sums = [
+            F.sum((route == label).cast("long")).alias(str(i))
+            for i, label in enumerate(labels)
+        ]
 
-    return routed_df.observe(obs, *sums), counts
+    def observe(
+        self, routed_df: DataFrame
+    ) -> tuple[DataFrame, Callable[[], dict[str, int]]]:
+        """Attach the counts to a routed micro-batch through a fresh
+        ``Observation``. Returns the observed frame and a function that,
+        once one action over that frame has run, gives the non-zero
+        counts. Filter the observed frame, not its input, so every route
+        is counted."""
+        obs = Observation()
+
+        def counts() -> dict[str, int]:
+            got = obs.get
+            return {
+                label: got[str(i)] for i, label in enumerate(self.labels) if got[str(i)]
+            }
+
+        return routed_df.observe(obs, *self._sums), counts
 
 
-def route_counts(routed_df: DataFrame, labels: list[str]) -> dict[str, int]:
+def route_counts(routed_df: DataFrame, counter: RouteCounter) -> dict[str, int]:
     """Count a routed micro-batch per route with one observed ``noop``
     write: a single stage with no shuffle, which also fills the batch's
     cache when ``routed_df`` is persisted."""
-    observed, counts = observe_routes(routed_df, labels)
+    observed, counts = counter.observe(routed_df)
     observed.write.format("noop").mode("overwrite").save()
     return counts()
 

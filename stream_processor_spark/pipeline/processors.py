@@ -49,7 +49,8 @@ from stream_processor_spark.operators.dlq import (
     failure_label,
 )
 
-_INT_TYPES = frozenset({"tinyint", "smallint", "int", "bigint"})
+# bit width of each Spark integral type
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
 
 
 def _coerce_out(v, dtype: str) -> tuple[bool, object]:
@@ -60,18 +61,22 @@ def _coerce_out(v, dtype: str) -> tuple[bool, object]:
     wrong-typed out value must become a routed error, never an Arrow
     conversion crash that aborts the task (a poison-pill restart loop in
     streaming). Returns ``(ok, coerced)``; numpy scalars count as their
-    abstract numeric type (Integral/Real), bools never count as numbers.
+    abstract numeric type (Integral/Real), bools never count as numbers,
+    and an int outside the column's width is wrong-typed too.
     """
     if v is None:
         return True, None
-    if dtype in _INT_TYPES:
+    if dtype in _INT_BITS:
         if isinstance(v, bool):
             return False, None
         if isinstance(v, Integral):
-            return True, int(v)
-        if isinstance(v, Real) and float(v).is_integer():
-            return True, int(v)
-        return False, None
+            iv = int(v)
+        elif isinstance(v, Real) and float(v).is_integer():
+            iv = int(v)
+        else:
+            return False, None
+        half = 1 << (_INT_BITS[dtype] - 1)
+        return (True, iv) if -half <= iv < half else (False, None)
     if dtype in ("float", "double"):
         if isinstance(v, bool) or not isinstance(v, Real):
             return False, None

@@ -3,7 +3,7 @@
 The reference's per-pod consumer loop (src/consumer.js:191-259) becomes one
 StreamingQuery:
 
-    readStream(source) → decode(incoming schema) → routed chain
+    readStream(source) → decode(incoming schema) → routed chain → encode
       → foreachBatch{ write ok → target; write dlq_i → step-i DLQ; metrics }
       → checkpoint
 
@@ -17,20 +17,28 @@ Semantics parity:
   path);
 - dropped (filter) records are counted, not written (consumer.js:134-137).
 
-Scale notes: on the wire path (a runner with a ``SchemaRegistry``, every
-sink a file kind on one Hadoop filesystem) a micro-batch is ONE Spark
-job, as the reference produces a batch's target and DLQ messages in one
-send (consumer.js:128-149). The routed frame carries a route-count
-observation, is encoded to ``(key, value, dest)`` and written once with
-``partitionBy("dest")`` into ``<target root>/_staging/batch-<id>``; the
-driver then moves each ``dest`` directory into its sink by rename and
-commits it. The encoder may be a JVM expression or a pure-Python codec
-(an ``arrow_udf``, exact per record). Elsewhere (no registry: ok rows
-keep every routed column; kafka/noop sinks; sinks on different
-filesystems) one observed ``noop`` write fills the batch's cache and
-counts every route, then each route branch filters the cached frame:
-one job to fill and count, one for the ok write and one per non-empty
-DLQ topic. Neither path shuffles.
+Scale notes: the pipeline is planned once per query, as the reference
+resolves its schemas and chain once at startup (consumer.js:212-219).
+Decode, chain and, on the wire path, encode are part of the streaming
+query, so Spark hands foreachBatch rows that are already routed and
+encoded; foreachBatch only checks for a replay, writes once and
+publishes. The route-count aggregates are built with the plan and
+attached to a fresh observation per batch. On the wire path (a runner
+with a ``SchemaRegistry``, every sink a file kind on one Hadoop
+filesystem) a micro-batch is ONE Spark job, as the reference produces a
+batch's target and DLQ messages in one send (consumer.js:128-149). The
+planned ``(key, value, route)`` rows carry the route-count observation,
+get their destination and are written once with ``partitionBy("dest")``
+into ``<target root>/_staging/batch-<id>``; the driver then moves each
+``dest`` directory into its sink by rename and commits it. The encoder
+may be a JVM expression or a pure-Python codec (an ``arrow_udf``, exact
+per record); rows no sink takes are not encoded. Elsewhere (no
+registry: ok rows keep every routed column; kafka/noop sinks; sinks on
+different filesystems) the planned rows are the routed ones, one
+observed ``noop`` write fills the batch's cache and counts every route,
+then each route branch filters the cached frame: one job to fill and
+count, one for the ok write and one per non-empty DLQ topic. Neither
+path shuffles.
 Kafka sinks are plan-built but need a broker — the file/parquet sinks give
 the same multi-sink semantics for local verification.
 """
@@ -51,7 +59,7 @@ from stream_processor_spark.pipeline.catalog import PipelineCatalog, ResolvedPip
 from stream_processor_spark.pipeline.codecs import SchemaRegistry
 from stream_processor_spark.pipeline.metrics import (
     PipelineMetrics,
-    observe_routes,
+    RouteCounter,
     route_counts,
 )
 from stream_processor_spark.pipeline.processors import ProcessorRegistry
@@ -175,6 +183,23 @@ class Sink:
             and f"batch-{batch_id}"
             in TxnTable(spark, self.path_or_topic).committed_txns()
         )
+
+
+@dataclass(frozen=True)
+class _BatchPlan:
+    """What every micro-batch of one query (or one ``run_batch`` call)
+    shares: the pipeline, its sinks and route counter, and, on the wire
+    path, each distinct sink with the routes it takes (``dests``) and the
+    ``dest`` column that gives a row's index into ``dests``, NULL for a
+    row no sink takes. ``dests`` is None when one partitioned write cannot
+    serve every sink."""
+
+    resolved: ResolvedPipeline
+    target_sink: Sink
+    branches: list[tuple[Sink, list[str]]]
+    counter: RouteCounter
+    dests: list[tuple[Sink, list[str]]] | None = None
+    dest: F.Column | None = None
 
 
 class PipelineRunner:
@@ -307,10 +332,10 @@ class PipelineRunner:
     ) -> dict[str, int]:
         """One micro-batch worth of the pipeline; returns route counts."""
         resolved = self.catalog.resolve(pipeline_id)
-        routed = self.routed_frame(resolved, self.decode_source(resolved, source_df))
-        return self._write_routed(
-            resolved, routed, target_sink, dlq_sinks or {}, metrics
+        plan = self._batch_plan(
+            resolved, source_df.sparkSession, target_sink, dlq_sinks or {}
         )
+        return self._write_planned(plan, self._planned_frame(plan, source_df), metrics)
 
     @staticmethod
     def _dlq_branches(
@@ -338,29 +363,39 @@ class PipelineRunner:
             raise KeyError(f"no sink bound for DLQ topic(s) {missing}")
         return [(dlq_sinks[t], labels) for t, labels in by_topic.items()]
 
-    def _write_routed(
+    def _batch_plan(
         self,
         resolved: ResolvedPipeline,
-        routed: DataFrame,
+        spark: SparkSession,
         target_sink: Sink,
         dlq_sinks: dict[str, Sink],
-        metrics: PipelineMetrics | None,
-        batch_id: int | None = None,
-    ) -> dict[str, int]:
+    ) -> _BatchPlan:
+        """Everything the batches of one query share, decided before the
+        first of them. Raises ``KeyError`` for a DLQ topic without a
+        sink."""
         branches = self._dlq_branches(resolved, dlq_sinks)
-        labels = route_labels(resolved.processor_names, resolved.dlq_topics)
+        counter = RouteCounter(
+            route_labels(resolved.processor_names, resolved.dlq_topics)
+        )
         sinks = [target_sink] + [sink for sink, _ in branches]
-        if self._one_write_serves(routed.sparkSession, sinks):
-            counts = self._write_staged(
-                resolved, routed, target_sink, branches, labels, batch_id
-            )
-        else:
-            counts = self._write_branches(
-                resolved, routed, target_sink, branches, labels, batch_id
-            )
-        if metrics is not None:
-            metrics.record_batch(counts, resolved.processor_names)
-        return counts
+        if not self._one_write_serves(spark, sinks):
+            return _BatchPlan(resolved, target_sink, branches, counter)
+        # one destination per distinct sink: the part files of different
+        # dest directories share names, so two directories must never be
+        # published into one sink
+        by_sink: dict[tuple[str, str], tuple[Sink, list[str]]] = {}
+        for sink, sink_labels in [(target_sink, [ROUTE_OK]), *branches]:
+            key = (sink.kind, sink.path_or_topic)
+            by_sink.setdefault(key, (sink, []))[1].extend(sink_labels)
+        dests = list(by_sink.values())
+        route = F.col("route")
+        dest = None
+        for i, (_, sink_labels) in enumerate(dests):
+            hit = route.isin(sink_labels)
+            dest = F.when(hit, i) if dest is None else dest.when(hit, i)
+        return _BatchPlan(
+            resolved, target_sink, branches, counter, dests, dest.alias("dest")
+        )
 
     def _one_write_serves(self, spark: SparkSession, sinks: list[Sink]) -> bool:
         """Can one partitioned parquet write feed every sink? It needs ok
@@ -373,106 +408,123 @@ class PipelineRunner:
             and len({HadoopFS(spark, s.path_or_topic).uri() for s in sinks}) == 1
         )
 
-    def _write_staged(
+    def _planned_frame(self, plan: _BatchPlan, source_df: DataFrame) -> DataFrame:
+        """The plan step both run modes share: decode, run the chain and,
+        on the wire path, encode every row to its sink's wire value."""
+        decoded = self.decode_source(plan.resolved, source_df)
+        return self._wire_frame(plan, self.routed_frame(plan.resolved, decoded))
+
+    def _wire_frame(self, plan: _BatchPlan, routed: DataFrame) -> DataFrame:
+        """On the wire path, a routed frame as ``(key, value, route)``:
+        ``value`` is the chain's output record for ``ok`` rows and the
+        ORIGINAL record (consumer.js:100) for rows a DLQ sink takes, both
+        encoded with the outgoing schema (consumer.js:128-132). Each
+        encoder gets a NULL record, which encodes to NULL without a call
+        into a Python codec, for the rows it does not serve, so no row is
+        encoded twice and a dropped or errored row not at all. Elsewhere
+        the routed frame itself."""
+        if plan.dests is None:
+            return routed
+        encode = self.schemas.encode
+        route = F.col("route")
+        dlq_labels = [label for _, labels in plan.branches for label in labels]
+        value = F.coalesce(
+            encode(
+                plan.resolved.outgoing_schema,
+                F.when(route == ROUTE_OK, _out_record(routed.columns)),
+            ),
+            encode(
+                plan.resolved.outgoing_schema,
+                F.when(route.isin(dlq_labels), _original_record(routed.columns)),
+            ),
+        )
+        return routed.select(
+            self._wire_key(routed.columns).alias("key"), value.alias("value"), route
+        )
+
+    def _write_planned(
         self,
-        resolved: ResolvedPipeline,
-        routed: DataFrame,
-        target_sink: Sink,
-        branches: list[tuple[Sink, list[str]]],
-        labels: list[str],
-        batch_id: int | None,
+        plan: _BatchPlan,
+        planned: DataFrame,
+        metrics: PipelineMetrics | None,
+        batch_id: int | None = None,
     ) -> dict[str, int]:
-        """The batch as one job: count every route, encode the ok rows
-        (``out_*``) and the DLQ rows (ORIGINAL record, consumer.js:100) to
-        the wire schema, write them once partitioned by destination, then
-        publish each destination's directory to its sink.
+        """Write one batch of the planned frame; returns its route counts."""
+        if plan.dests is not None:
+            counts = self._write_staged(plan, planned, batch_id)
+        else:
+            counts = self._write_branches(plan, planned, batch_id)
+        if metrics is not None:
+            metrics.record_batch(counts, plan.resolved.processor_names)
+        return counts
+
+    def _write_staged(
+        self, plan: _BatchPlan, planned: DataFrame, batch_id: int | None
+    ) -> dict[str, int]:
+        """The batch as one job: count every route, write the wire rows
+        once partitioned by destination, then publish each destination's
+        directory to its sink.
 
         Replay is decided before the job: a sink that already committed
         this batch gets no rows, and when no sink needs the batch the
         routes are counted with a ``noop`` write instead, so the
         observation never waits on a job that did not run."""
-        spark = routed.sparkSession
-        # one destination per distinct sink still missing this batch: the
-        # part files of different dest directories share names, so two
-        # directories must never be published into one sink
-        by_sink: dict[tuple[str, str], tuple[Sink, list[str]]] = {}
-        for sink, sink_labels in [(target_sink, [ROUTE_OK]), *branches]:
-            key = (sink.kind, sink.path_or_topic)
-            by_sink.setdefault(key, (sink, []))[1].extend(sink_labels)
+        spark = planned.sparkSession
         pending = [
-            (sink, sink_labels)
-            for sink, sink_labels in by_sink.values()
+            i
+            for i, (sink, _) in enumerate(plan.dests)
             if not sink.has_committed(spark, batch_id)
         ]
         if not pending:
-            return route_counts(routed, labels)
-
-        route = F.col("route")
-        dest = None
-        for i, (_, sink_labels) in enumerate(pending):
-            hit = route.isin(sink_labels)
-            dest = F.when(hit, i) if dest is None else dest.when(hit, i)
-        encode = self.schemas.encode
-        value = F.when(
-            route == ROUTE_OK,
-            encode(resolved.outgoing_schema, _out_record(routed.columns)),
-        ).otherwise(encode(resolved.outgoing_schema, _original_record(routed.columns)))
-
+            return route_counts(planned, plan.counter)
         staging = "{}/_staging/{}".format(
-            target_sink.path_or_topic.rstrip("/"),
+            plan.target_sink.path_or_topic.rstrip("/"),
             f"batch-{batch_id}" if batch_id is not None else f"adhoc-{uuid.uuid4().hex}",
         )
         fs = HadoopFS(spark, staging)
         fs.delete(staging, recursive=True)  # left by an attempt that crashed
-        observed, counts = observe_routes(routed, labels)
+        observed, counts = plan.counter.observe(planned)
         try:
             (
-                observed.filter(dest.isNotNull())
-                .select(
-                    self._wire_key(routed.columns).alias("key"),
-                    value.alias("value"),
-                    dest.alias("dest"),
-                )
+                observed.select("key", "value", plan.dest)
+                .filter(F.col("dest").isin(pending))
                 .write.partitionBy("dest")
                 .parquet(staging)
             )
             written = set(fs.list_names(staging))
-            for i, (sink, _) in enumerate(pending):
+            for i in pending:
                 if f"dest={i}" in written:
+                    sink = plan.dests[i][0]
                     sink.write_batch(Staged(spark, f"{staging}/dest={i}"), batch_id)
             return counts()
         finally:
             fs.delete(staging, recursive=True)
 
     def _write_branches(
-        self,
-        resolved: ResolvedPipeline,
-        routed: DataFrame,
-        target_sink: Sink,
-        branches: list[tuple[Sink, list[str]]],
-        labels: list[str],
-        batch_id: int | None,
+        self, plan: _BatchPlan, routed: DataFrame, batch_id: int | None
     ) -> dict[str, int]:
         """The batch as one job to fill its cache and count its routes,
         then one write per non-empty branch over the cached frame."""
         routed = routed.persist()
         try:
-            counts = route_counts(routed, labels)
+            counts = route_counts(routed, plan.counter)
             ok = routed.filter(F.col("route") == ROUTE_OK)
-            target_sink.write_batch(self.encode_output(resolved, ok), batch_id)
+            plan.target_sink.write_batch(
+                self.encode_output(plan.resolved, ok), batch_id
+            )
             # ORIGINAL record payload: input columns only (consumer.js:100),
             # wire-encoded with the outgoing schema (consumer.js:128-132)
             original_cols = [
                 c for c in routed.columns
                 if c != "route" and not c.startswith("out_")
             ]
-            for sink, sink_labels in branches:
+            for sink, sink_labels in plan.branches:
                 if sum(counts.get(label, 0) for label in sink_labels) == 0:
                     continue
                 originals = routed.filter(
                     F.col("route").isin(sink_labels)
                 ).select(*original_cols)
-                sink.write_batch(self.encode_dlq(resolved, originals), batch_id)
+                sink.write_batch(self.encode_dlq(plan.resolved, originals), batch_id)
             return counts
         finally:
             routed.unpersist()
@@ -491,21 +543,25 @@ class PipelineRunner:
 
         ``stream_df`` comes from :func:`kafka_source` in production or the
         file-stream harness in tests — the plan is identical either way.
+        The pipeline is planned once per query: decode, chain and (on the
+        wire path) encode are part of the streaming query itself, so Spark
+        hands each micro-batch over already routed and encoded, and
+        foreachBatch only checks for a replay, writes once and publishes.
         Raises ``KeyError`` before the query starts when a DLQ topic of
         the chain has no sink.
         """
         resolved = self.catalog.resolve(pipeline_id)
         metrics = metrics or PipelineMetrics(str(pipeline_id), self.pod_name)
-        dlq_sinks = dlq_sinks or {}
-        self._dlq_branches(resolved, dlq_sinks)
+        plan = self._batch_plan(
+            resolved, stream_df.sparkSession, target_sink, dlq_sinks or {}
+        )
 
-        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-            routed = self.routed_frame(resolved, self.decode_source(resolved, batch_df))
-            self._write_routed(
-                resolved, routed, target_sink, dlq_sinks, metrics, batch_id=batch_id
-            )
+        def process_batch(planned: DataFrame, batch_id: int) -> None:
+            self._write_planned(plan, planned, metrics, batch_id=batch_id)
 
-        writer = stream_df.writeStream.foreachBatch(process_batch)
+        writer = self._planned_frame(plan, stream_df).writeStream.foreachBatch(
+            process_batch
+        )
         if checkpoint_dir:
             writer = writer.option("checkpointLocation", checkpoint_dir)
         writer = writer.trigger(**(trigger or {"availableNow": True}))

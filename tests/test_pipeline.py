@@ -117,6 +117,15 @@ def _decoded(rows) -> list[tuple]:
     return sorted((r.key, json.loads(r.value).get("num")) for r in rows)
 
 
+def _write_routed(runner, resolved, routed, target_sink, dlq_sinks, metrics, batch_id):
+    """Write an already routed frame as micro-batch ``batch_id`` through
+    the plan a query over it would make; returns its route counts."""
+    plan = runner._batch_plan(resolved, routed.sparkSession, target_sink, dlq_sinks)
+    return runner._write_planned(
+        plan, runner._wire_frame(plan, routed), metrics, batch_id
+    )
+
+
 # Runners over both write paths: without a registry the ok rows keep every
 # routed column, so each branch is written on its own; with one, ok and DLQ
 # rows share the (key, value) wire schema and one routed write serves both.
@@ -243,6 +252,47 @@ def test_python_chain_wrong_typed_output_routes_not_crashes(spark):
     ok = reg.apply_python_chain(_demo_df(spark), ["floaty"], [None])
     rows = {r.key: (r.route, r.out_num) for r in ok.collect()}
     assert all(v[0] == "ok" and isinstance(v[1], int) for v in rows.values())
+
+
+def test_python_chain_out_of_range_int_routes_not_crashes(spark):
+    """An int too wide for its output column (2**40 for ``num int``,
+    2**63 for a ``bigint``) is a wrong-typed value: the record takes the
+    last step's error or DLQ route instead of failing the Arrow
+    conversion, and with it the task. Each width's edge values pass."""
+    from stream_processor_spark.pipeline.processors import Processor, _coerce_out
+
+    for dtype, bits in (("tinyint", 8), ("smallint", 16), ("int", 32), ("bigint", 64)):
+        lo, hi = -(2 ** (bits - 1)), 2 ** (bits - 1) - 1
+        assert _coerce_out(float(lo), dtype) == (True, lo)
+        assert _coerce_out(hi, dtype) == (True, hi)
+        assert _coerce_out(hi + 1, dtype) == (False, None), dtype
+        assert _coerce_out(lo - 1, dtype) == (False, None), dtype
+
+    out = {"k1": 2**31 - 1, "k2": 2**40, "k3": -(2**31), "k4": -(2**31) - 1}
+    reg = ProcessorRegistry()
+    reg.register(
+        Processor(name="widen", record_fn=lambda r: {**r, "num": out[r["key"]]})
+    )
+    routed = reg.apply_python_chain(_demo_df(spark), ["widen"], [None])
+    assert {r.key: (r.route, r.out_num) for r in routed.collect()} == {
+        "k1": ("ok", 2**31 - 1),
+        "k2": ("error_widen", None),
+        "k3": ("ok", -(2**31)),
+        "k4": ("error_widen", None),
+    }
+    routed = reg.apply_python_chain(_demo_df(spark), ["widen"], ["dlq-widen"])
+    bad = {r.key: (r.route, r.num) for r in routed.collect() if r.route != "ok"}
+    assert bad == {"k2": ("dlq_widen", 3), "k4": ("dlq_widen", 8)}
+
+    wide = spark.createDataFrame(
+        [("k1", "x", 1), ("k2", "y", 2)], "key string, value string, num bigint"
+    )
+    out.update({"k1": 2**63 - 1, "k2": 2**63})
+    routed = reg.apply_python_chain(wide, ["widen"], [None])
+    assert {r.key: (r.route, r.out_num) for r in routed.collect()} == {
+        "k1": ("ok", 2**63 - 1),
+        "k2": ("error_widen", None),
+    }
 
 
 def test_python_chain_sees_ints_whatever_the_batch_holds(spark):
@@ -604,15 +654,15 @@ def test_idempotent_sink_replay_does_not_duplicate(spark, catalog, tmp_path):
         routed = runner.routed_frame(resolved, _demo_df(spark))
 
         for _ in range(2):  # same batch written twice == retry
-            runner._write_routed(resolved, routed, target, {"dlq-capitalize": dlq},
-                                 None, batch_id=7)
+            _write_routed(runner, resolved, routed, target, {"dlq-capitalize": dlq},
+                          None, batch_id=7)
         out = spark.read.parquet(target.path_or_topic)
         assert out.count() == 2, path  # k1, k4 — once, not twice
         assert spark.read.parquet(dlq.path_or_topic).count() == 1, path  # k3 once
 
         # a DIFFERENT batch id appends alongside (normal progress)
-        runner._write_routed(resolved, routed, target, {"dlq-capitalize": dlq},
-                             None, batch_id=8)
+        _write_routed(runner, resolved, routed, target, {"dlq-capitalize": dlq},
+                      None, batch_id=8)
         assert spark.read.parquet(target.path_or_topic).count() == 4, path
 
 
@@ -667,8 +717,8 @@ def test_shared_dlq_topic_no_clobber_on_idempotent_replay(spark, tmp_path):
         target = Sink("parquet_idempotent", str(tmp_path / path / "target"))
         dlq = Sink("parquet_idempotent", str(tmp_path / path / "dlq"))
         for _ in range(2):  # replay the same micro-batch (retry case)
-            runner._write_routed(
-                resolved, routed, target, {"dlq-shared": dlq}, None, batch_id=3
+            _write_routed(
+                runner, resolved, routed, target, {"dlq-shared": dlq}, None, batch_id=3
             )
         rows = spark.read.parquet(dlq.path_or_topic).collect()
         # both steps' originals present exactly once each
@@ -690,6 +740,15 @@ def _run_in_job_group(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    jobs, shuffle_reads = _group_jobs(spark, group)
+    return out, len(jobs), shuffle_reads
+
+
+def _group_jobs(spark, group: str):
+    """The ids of the jobs Spark ran under job group ``group`` (a
+    streaming query's run id, say), and the ids of their completed
+    stages that read shuffle data."""
+    sc = spark.sparkContext
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()  # job and stage events are async
     status, store = sc.statusTracker(), jsc.statusStore()
@@ -701,7 +760,7 @@ def _run_in_job_group(spark, fn):
         if store.lastStageAttempt(s).numCompleteTasks() > 0
         and store.lastStageAttempt(s).shuffleReadRecords() > 0
     ]
-    return out, len(jobs), shuffle_reads
+    return list(jobs), shuffle_reads
 
 
 def test_run_batch_job_count(spark, catalog, tmp_path):
@@ -737,6 +796,78 @@ def test_run_batch_job_count(spark, catalog, tmp_path):
         assert shuffle_reads == [], name
 
 
+def test_streaming_plans_once_per_query(spark, catalog, tmp_path, monkeypatch):
+    """A wire query decodes and routes its source once, when it starts:
+    Spark hands every micro-batch over already planned. Each of three
+    batches (0, 1 and 2 DLQ rows) is still one job without a shuffle
+    read under the query's run id, and the metrics equal the per-batch
+    sums, so the route counts built once with the plan are fresh on
+    every batch."""
+    from pyspark.sql.types import StringType, StructField
+
+    from stream_processor_spark.operators.txn_table import TxnTable
+    from stream_processor_spark.streaming.file_stream import FileBroker
+
+    calls = {"decode_source": 0, "routed_frame": 0}
+    for name in calls:
+
+        def spy(self, *args, _name=name, _plan=getattr(PipelineRunner, name)):
+            calls[_name] += 1
+            return _plan(self, *args)
+
+        monkeypatch.setattr(PipelineRunner, name, spy)
+
+    k1, k2, k3, k4 = RECORDS
+    batches = [  # with the ok, dropped and dlq rows of each
+        ([k1, k2, k4], {"ok": 2, "dropped": 1}),
+        ([k3, {"key": "k5", "value": "x", "num": 6}], {"ok": 1, "dlq_capitalize": 1}),
+        (
+            [{"key": "k6", "value": None, "num": 1}, {**k3, "key": "k7"}, k2],
+            {"dropped": 1, "dlq_capitalize": 2},
+        ),
+    ]
+    topic = FileBroker(str(tmp_path / "broker")).topic(
+        "topic-in",
+        StructType([StructField("key", StringType()), StructField("value", StringType())]),
+    )
+    for records, _ in batches:  # one file, so one micro-batch, each
+        rows = [(r["key"], json.dumps(r)) for r in records]
+        topic.produce(spark.createDataFrame(rows, topic.schema).coalesce(1))
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, _json_schemas())
+    target = Sink("txn_table", str(tmp_path / "target"))
+    dlq = Sink("txn_table", str(tmp_path / "dlq"))
+    metrics = PipelineMetrics("1")
+    q = runner.run_streaming(
+        1,
+        topic.read_stream(spark, max_files_per_trigger=1),
+        target,
+        {"dlq-capitalize": dlq},
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        metrics=metrics,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    assert calls == {"decode_source": 1, "routed_frame": 1}
+    t, d = TxnTable(spark, target.path_or_topic), TxnTable(spark, dlq.path_or_topic)
+    # a sink commits the batches that hold rows for it
+    assert t.committed_txns() == {"batch-0", "batch-1"}
+    assert d.committed_txns() == {"batch-1", "batch-2"}
+    jobs, shuffle_reads = _group_jobs(spark, str(q.runId))
+    assert (len(jobs), shuffle_reads) == (len(batches), [])
+    assert _decoded(t.read().collect()) == [("k1", 12), ("k4", 18), ("k5", 16)]
+    assert [r.key for r in d.read().orderBy("key").collect()] == ["k3", "k6", "k7"]
+
+    def total(route: str) -> int:
+        return sum(counts.get(route, 0) for _, counts in batches)
+
+    snap = metrics.snapshot()
+    assert snap["messages_received_total"] == sum(len(r) for r, _ in batches)
+    assert snap["messages_completed_total"] == total("ok")
+    assert snap["messages_dropped_total"] == total("dropped")
+    assert snap["messages_dlq_total"] == total("dlq_capitalize")
+
+
 def test_python_codec_encodes_ok_and_dlq_rows_of_one_batch(spark, catalog, tmp_path):
     """An ok row and DLQ rows with and without a null ``num`` share one
     Arrow batch of the one-write path: every payload is written and
@@ -767,6 +898,43 @@ def test_python_codec_encodes_ok_and_dlq_rows_of_one_batch(spark, catalog, tmp_p
 
     assert payloads(target) == [{"key": "k1", "value": "HELLO_appended", "num": 12}]
     assert payloads(dlq) == records[1:]
+
+
+def test_wire_encodes_each_destined_row_once(spark, catalog, tmp_path):
+    """With a Python codec, the one-write path calls the encoder once per
+    row a sink takes (the ok rows' output record, the DLQ row's ORIGINAL
+    record) and never for a dropped row: each encoder is handed NULL for
+    the rows it does not serve."""
+    from pyspark.sql.types import BinaryType
+
+    from stream_processor_spark.pipeline import avro_py, codecs
+
+    log = tmp_path / "encoded.log"
+
+    class Logged(SchemaRegistry):
+        """Avro through ``avro_py``, logging each record's key first."""
+
+        def _encode_payload(self, s, record):
+            schema = avro_py.parse_schema(s.avro_json)
+
+            def encode(r, log=str(log), schema=schema):
+                with open(log, "a") as f:
+                    f.write(f"{r['key']}\n")
+                return avro_py.encode(r, schema)
+
+            return codecs._per_record(encode, BinaryType())(record)
+
+    schemas = Logged()
+    schemas.register(_avro_schemas().get("schema_a"))
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, schemas)
+    counts = runner.run_batch(
+        1,
+        _avro_wire_df(spark, RECORDS),
+        Sink("parquet", str(tmp_path / "target")),
+        {"dlq-capitalize": Sink("parquet", str(tmp_path / "dlq"))},
+    )
+    assert counts == {"ok": 2, "dropped": 1, "dlq_capitalize": 1}
+    assert sorted(log.read_text().split()) == ["k1", "k3", "k4"]
 
 
 def test_unbound_dlq_topic_fails_before_any_write(spark, catalog, tmp_path):
@@ -814,8 +982,8 @@ def test_wire_replay_of_committed_batch_only_counts(spark, catalog, tmp_path):
         routed = runner.routed_frame(
             resolved, runner.decode_source(resolved, _wire_df(spark, RECORDS))
         )
-        return runner._write_routed(
-            resolved, routed, target, {"dlq-capitalize": dlq}, None, batch_id=7
+        return _write_routed(
+            runner, resolved, routed, target, {"dlq-capitalize": dlq}, None, batch_id=7
         )
 
     first = write()
@@ -842,8 +1010,8 @@ def test_wire_partial_replay_writes_only_missing_sinks(spark, catalog, tmp_path)
             resolved, runner.decode_source(resolved, _wire_df(spark, RECORDS))
         )
         dlq = Sink("txn_table", str(tmp_path / dlq_name))
-        runner._write_routed(
-            resolved, routed, target, {"dlq-capitalize": dlq}, None, batch_id=7
+        _write_routed(
+            runner, resolved, routed, target, {"dlq-capitalize": dlq}, None, batch_id=7
         )
         if dlq_name == "D1":
             snap = TxnTable(spark, target.path_or_topic).snapshot()
@@ -873,8 +1041,8 @@ def test_wire_replay_removes_leftover_staging(spark, catalog, tmp_path):
             routed = runner.routed_frame(
                 resolved, runner.decode_source(resolved, _wire_df(spark, records))
             )
-            runner._write_routed(
-                resolved, routed, target, {"dlq-capitalize": dlq}, None,
+            _write_routed(
+                runner, resolved, routed, target, {"dlq-capitalize": dlq}, None,
                 batch_id=batch_id,
             )
 

@@ -178,6 +178,8 @@ def test_runner_txn_table_sink_replay_effectively_once(spark, tmp_path):
     (same batch_id — the foreachBatch retry case) commits once; a new
     batch id appends alongside. Mirrors the parquet_idempotent test but
     with atomic manifest commits instead of per-batch directories."""
+    from tests.test_pipeline import _write_routed
+
     from stream_processor_spark.pipeline.catalog import PipelineCatalog
     from stream_processor_spark.pipeline.processors import BUILTIN_PROCESSORS
     from stream_processor_spark.pipeline.runner import PipelineRunner, Sink
@@ -215,15 +217,15 @@ def test_runner_txn_table_sink_replay_effectively_once(spark, tmp_path):
     )
     routed = runner.routed_frame(resolved, demo)
     for _ in range(2):  # same batch twice == foreachBatch retry
-        runner._write_routed(
-            resolved, routed, target, {"dlq-capitalize": dlq}, None,
+        _write_routed(
+            runner, resolved, routed, target, {"dlq-capitalize": dlq}, None,
             batch_id=7,
         )
     assert TxnTable(spark, target.path_or_topic).read().count() == 1
     assert TxnTable(spark, dlq.path_or_topic).read().count() == 1
     # a different batch id appends (normal progress)
-    runner._write_routed(
-        resolved, routed, target, {"dlq-capitalize": dlq}, None, batch_id=8
+    _write_routed(
+        runner, resolved, routed, target, {"dlq-capitalize": dlq}, None, batch_id=8
     )
     assert TxnTable(spark, target.path_or_topic).read().count() == 2
 
