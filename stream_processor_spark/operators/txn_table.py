@@ -24,20 +24,32 @@ load-bearing core):
   MERGE cannot rebase (its staged rows were derived from the stale
   snapshot — retrying them would drop the winner's rows), so it
   discards the staged files and re-derives against the new snapshot.
-- **Readers resolve the latest manifest** (max version in one directory
-  listing) and read exactly the files it names. A crashed writer leaves
-  orphan data files and possibly a temp manifest — invisible, cleaned
+- **Readers resolve the latest manifest** and read exactly the files it
+  names. Versions are contiguous and a manifest is never deleted, so a
+  handle lists ``_manifests/`` once, on its first call, and from then on
+  finds the latest version by probing forward (``exists(v+1)``) from the
+  last version it read or committed. A crashed writer leaves orphan data
+  files and possibly a temp manifest — invisible, cleaned
   opportunistically by ``vacuum()``.
 - **Idempotent replay.** Every commit may carry a ``txn_id``; committed
   ids accumulate in the manifest. An ``append`` whose txn_id is already
-  committed is a no-op — so a Structured Streaming ``foreachBatch``
-  retry (same epoch id re-delivered after a sink-side crash) commits
-  once, upgrading the at-least-once stream to effectively-once end to
-  end. This is exactly the (epochId, txnId) dedup contract Spark
-  documents for idempotent sinks.
+  committed is a no-op. A streaming micro-batch commits instead as an
+  ``epoch`` ``(query id, batch id)``: the manifest keeps one watermark
+  per query, the last batch id it committed (Delta's ``SetTransaction``),
+  and an epoch is committed when its batch id is at most its query's
+  watermark. So a Structured Streaming ``foreachBatch`` retry (same
+  epoch re-delivered after a sink-side crash) commits once, upgrading
+  the at-least-once stream to effectively-once end to end, while
+  another query's batch of the same id is not mistaken for it. This is
+  the (epochId, txnId) dedup contract Spark documents for idempotent
+  sinks.
 
-Scale notes: the commit path does O(1) driver-side work per transaction
-(one listing of ``_manifests/``, one manifest read, one write+rename) —
+Scale notes: a handle that keeps committing (the runner keeps one per
+sink for the life of a streaming query) does no listing and no manifest
+read per transaction: an ``exists`` probe for a newer version, one
+write+rename, and the manifest it committed becomes its snapshot. A
+handle reads a manifest only when another writer committed since its
+last call, and lists ``_manifests/`` only on its first call. There is
 no data movement; data files are written by executors with full
 parallelism. The manifest stores ONE path per file; at 100 TB /
 ~100k files that is a few MB of JSON — beyond that, real formats split
@@ -103,13 +115,17 @@ class HadoopFS:
                 out.append(f.toString())
         return out
 
-    def list_files(self, p: str) -> list[str]:
-        """Fully-qualified paths of the files directly under ``p``."""
-        return [
+    def list_files(self, p: str, suffix: str = "") -> list[str]:
+        """Fully-qualified paths of the files directly under ``p`` whose
+        names end in ``suffix``. One ``listStatus``: unlike ``listFiles``
+        it loads no permissions, which a local filesystem without
+        libhadoop does by starting an ``ls -ld`` process per file."""
+        paths = [
             st.getPath().toString()
             for st in self._fs.listStatus(self.path(p))
             if st.isFile()
         ]
+        return [f for f in paths if f.endswith(suffix)]
 
     def uri(self) -> str:
         """Scheme and authority of this filesystem: a rename works only
@@ -158,6 +174,15 @@ def _canon_path(p: str) -> str:
     return "/" + p.lstrip("/")
 
 
+def _replays(snap: dict, txn_id: str | None, epoch: tuple[str, int] | None) -> bool:
+    """Has ``snap`` already committed this transaction?"""
+    if epoch is not None:
+        query, batch_id = epoch
+        if batch_id <= snap.get("watermarks", {}).get(query, -1):
+            return True
+    return txn_id is not None and txn_id in snap.get("committed_txns", [])
+
+
 def _version_of(name: str) -> int | None:
     if name.startswith("v") and name.endswith(".json"):
         core = name[1 : -len(".json")]
@@ -171,10 +196,16 @@ class TxnTable:
 
     >>> t = TxnTable(spark, "/data/events_table")
     >>> t.append(df, txn_id="batch-7")     # no-op if batch-7 committed
+    >>> t.append(df, epoch=(query_id, 7))  # no-op if that query reached 7
     >>> t.read().count()
     >>> t.overwrite(df2)
     >>> t.merge(updates, key_cols=["c_custkey"])   # copy-on-write upsert
     >>> t.read(version=3)                  # time travel
+
+    A handle keeps the latest snapshot it read or committed, so keep one
+    per writer (the runner keeps one per sink for the life of a query)
+    and use it from one thread at a time. Handles on one table need not
+    share anything: the manifest rename decides every commit.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -183,31 +214,53 @@ class TxnTable:
         self.fs = HadoopFS(spark, self.root)
         self.manifest_dir = f"{self.root}/{MANIFEST_DIR}"
         self.data_dir = f"{self.root}/{DATA_DIR}"
+        self._latest: int | None = None  # -1: no commit seen yet
+        self._snap: dict | None = None  # the manifest of version _latest
 
     # ------------------------------------------------------------ snapshots
 
     def latest_version(self) -> int | None:
-        versions = [
-            v
-            for v in (_version_of(n) for n in self.fs.list_names(self.manifest_dir))
-            if v is not None
-        ]
-        return max(versions) if versions else None
+        """The latest committed version, None before the first commit.
+        The first call lists ``_manifests/``; later calls probe forward
+        from the version found last, since versions are contiguous and
+        manifests are never deleted."""
+        if self._latest is None:
+            names = self.fs.list_names(self.manifest_dir)
+            self._latest = max(
+                (v for v in map(_version_of, names) if v is not None), default=-1
+            )
+        else:
+            while self.fs.exists(self._manifest_path(self._latest + 1)):
+                self._latest += 1
+        return self._latest if self._latest >= 0 else None
 
     def _manifest_path(self, version: int) -> str:
         return f"{self.manifest_dir}/v{version:0{_VERSION_WIDTH}d}.json"
 
     def snapshot(self, version: int | None = None) -> dict:
         """The committed manifest dict for ``version`` (default latest);
-        the empty snapshot if the table has no commits yet."""
+        the empty snapshot if the table has no commits yet. The latest
+        one is read once per version and shared: treat it as read-only."""
         if version is None:
             version = self.latest_version()
         if version is None:
-            return {"version": -1, "files": [], "committed_txns": []}
-        return json.loads(self.fs.read_text(self._manifest_path(version)))
+            return {"version": -1, "files": [], "committed_txns": [], "watermarks": {}}
+        if self._snap is not None and self._snap["version"] == version:
+            return self._snap
+        snap = json.loads(self.fs.read_text(self._manifest_path(version)))
+        if version == self._latest:
+            self._snap = snap
+        return snap
 
     def committed_txns(self) -> set[str]:
         return set(self.snapshot().get("committed_txns", []))
+
+    def is_committed(
+        self, txn_id: str | None = None, epoch: tuple[str, int] | None = None
+    ) -> bool:
+        """Is ``txn_id``, or the micro-batch ``epoch`` (query id, batch
+        id), already committed? False when neither is given."""
+        return _replays(self.snapshot(), txn_id, epoch)
 
     # -------------------------------------------------------------- reading
 
@@ -231,7 +284,7 @@ class TxnTable:
         their fully-qualified paths. Nothing is visible yet."""
         txn_dir = f"{self.data_dir}/txn-{uuid.uuid4().hex}"
         df.write.mode("errorifexists").parquet(txn_dir)
-        return sorted(self.fs.list_files_recursive(txn_dir, ".parquet"))
+        return sorted(self.fs.list_files(txn_dir, ".parquet"))
 
     def _adopt(self, src_dir: str) -> list[str]:
         """Move a directory of parquet files, already written on this
@@ -242,7 +295,7 @@ class TxnTable:
         self.fs.mkdirs(self.data_dir)
         if not self.fs.rename_no_overwrite(src_dir, txn_dir):
             raise OSError(f"TxnTable {self.root}: could not move {src_dir} in")
-        return sorted(self.fs.list_files_recursive(txn_dir, ".parquet"))
+        return sorted(self.fs.list_files(txn_dir, ".parquet"))
 
     def _try_commit(self, manifest: dict) -> bool:
         version = manifest["version"]
@@ -263,10 +316,12 @@ class TxnTable:
         max_retries: int = 20,
         expected_parent: int | None = None,
         carried_files: list[str] | None = None,
+        epoch: tuple[str, int] | None = None,
     ) -> int | None:
         """Optimistic-concurrency commit loop. Returns the committed
-        version, or None when ``txn_id`` was already committed (replay
-        no-op). Staged files for a skipped replay are deleted.
+        version, or None when ``txn_id`` or ``epoch`` was already
+        committed (replay no-op). Staged files for a skipped replay are
+        deleted. A committed ``epoch`` raises its query's watermark.
 
         ``expected_parent`` marks a commit whose staged data was DERIVED
         from that snapshot version (merge): if another writer committed
@@ -279,7 +334,8 @@ class TxnTable:
         for _ in range(max_retries):
             snap = self.snapshot()
             committed = snap.get("committed_txns", [])
-            if txn_id is not None and txn_id in committed:
+            watermarks = snap.get("watermarks", {})
+            if _replays(snap, txn_id, epoch):
                 # replay of an already-committed transaction: drop the
                 # newly staged (invisible) files and do nothing
                 for f in new_files:
@@ -302,34 +358,53 @@ class TxnTable:
                     else list(snap["files"]) + list(new_files)
                 ),
                 "committed_txns": committed + ([txn_id] if txn_id else []),
+                "watermarks": (
+                    {**watermarks, epoch[0]: epoch[1]} if epoch else watermarks
+                ),
             }
             if self._try_commit(manifest):
+                self._latest, self._snap = manifest["version"], manifest
                 return manifest["version"]
             # lost the race: rebase on the winner's snapshot and retry
         raise CommitConflict(
             f"TxnTable {self.root}: {max_retries} commit attempts lost races"
         )
 
-    def append(self, df: DataFrame, txn_id: str | None = None) -> int | None:
-        """Append ``df`` as a new snapshot. With ``txn_id``, replaying
-        the same transaction is a no-op (exactly-once foreachBatch)."""
-        if txn_id is not None and txn_id in self.committed_txns():
+    def append(
+        self,
+        df: DataFrame,
+        txn_id: str | None = None,
+        epoch: tuple[str, int] | None = None,
+    ) -> int | None:
+        """Append ``df`` as a new snapshot. With ``txn_id`` or ``epoch``
+        (query id, micro-batch id), replaying the same transaction is a
+        no-op (exactly-once foreachBatch)."""
+        if self.is_committed(txn_id, epoch):
             return None  # cheap pre-check: skip staging entirely
-        return self._commit(self._stage(df), "append", txn_id, replace=False)
+        return self._commit(
+            self._stage(df), "append", txn_id, replace=False, epoch=epoch
+        )
 
-    def append_dir(self, src_dir: str, txn_id: str | None = None) -> int | None:
-        """Append the parquet files under ``src_dir`` by moving the
-        directory into the table, for data another job already wrote on
-        this table's filesystem. Same replay contract as :meth:`append`;
-        the data is already written, so there is no staging for a
-        pre-check to skip, and a replay's moved files are dropped by the
-        commit loop."""
-        return self._commit(self._adopt(src_dir), "append", txn_id, replace=False)
+    def append_dir(
+        self,
+        src_dir: str,
+        txn_id: str | None = None,
+        epoch: tuple[str, int] | None = None,
+    ) -> int | None:
+        """Append the parquet files directly under ``src_dir`` by moving
+        the directory into the table, for data another job already wrote
+        on this table's filesystem. Same replay contract as
+        :meth:`append`; the data is already written, so there is no
+        staging for a pre-check to skip, and a replay's moved files are
+        dropped by the commit loop."""
+        return self._commit(
+            self._adopt(src_dir), "append", txn_id, replace=False, epoch=epoch
+        )
 
     def overwrite(self, df: DataFrame, txn_id: str | None = None) -> int | None:
         """Replace the table contents with ``df`` (old files stay on
         disk for time travel until ``vacuum``)."""
-        if txn_id is not None and txn_id in self.committed_txns():
+        if self.is_committed(txn_id):
             return None
         return self._commit(self._stage(df), "overwrite", txn_id, replace=True)
 
@@ -364,7 +439,7 @@ class TxnTable:
         fresh data, which is strictly safer)."""
         from pyspark.sql import functions as F
 
-        if txn_id is not None and txn_id in self.committed_txns():
+        if self.is_committed(txn_id):
             return None
         last_err: CommitConflict | None = None
         for _ in range(max_rederives):
@@ -462,7 +537,7 @@ class TxnTable:
         """
         from pyspark.sql import functions as F
 
-        if txn_id is not None and txn_id in self.committed_txns():
+        if self.is_committed(txn_id):
             return None
         cond = F.expr(condition) if isinstance(condition, str) else condition
         last_err: CommitConflict | None = None
@@ -566,7 +641,7 @@ class TxnTable:
         by committed manifests. Carried files are untouchable by
         construction; the ``committed_txns`` pre-check just makes the
         common replay cheap."""
-        if txn_id is not None and txn_id in self.committed_txns():
+        if self.is_committed(txn_id):
             return None
         snap = self.snapshot(version)
         if snap["version"] != version:

@@ -29,8 +29,10 @@ filesystem) a micro-batch is ONE Spark job, as the reference produces a
 batch's target and DLQ messages in one send (consumer.js:128-149). The
 planned ``(key, value, route)`` rows carry the route-count observation,
 get their destination and are written once with ``partitionBy("dest")``
-into ``<target root>/_staging/batch-<id>``; the driver then moves each
-``dest`` directory into its sink by rename and commits it. The encoder
+into ``<target root>/_staging/<query id>-batch-<id>``; the driver then
+moves each ``dest`` directory into its sink by rename and commits it,
+through one ``TxnTable`` handle per ``txn_table`` sink that the query
+keeps from its first micro-batch to its last. The encoder
 may be a JVM expression or a pure-Python codec (an ``arrow_udf``, exact
 per record); rows no sink takes are not encoded. Elsewhere (no
 registry: ok rows keep every routed column; kafka/noop sinks; sinks on
@@ -68,13 +70,23 @@ from stream_processor_spark.pipeline.processors import ProcessorRegistry
 FILE_SINKS = ("parquet", "parquet_idempotent", "txn_table")
 
 
+def _query_id(spark: SparkSession) -> str | None:
+    """The id of the streaming query whose micro-batch this thread runs,
+    None outside one. It stays the same when a query restarts from its
+    checkpoint and is new for a new checkpoint."""
+    return spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+
+
 @dataclass(frozen=True)
 class Staged:
     """One sink's share of a routed write, already on disk: a directory
-    of parquet files on the sink's filesystem."""
+    of parquet files on the sink's filesystem, reached through ``fs``.
+    ``table`` is the query's handle on a ``txn_table`` sink."""
 
     spark: SparkSession
     path: str
+    fs: HadoopFS
+    table: TxnTable | None = None
 
 
 @dataclass
@@ -88,10 +100,12 @@ class Sink:
     upgrading the file sink to effectively-once; read the sink root
     recursively) | ``txn_table`` (manifest-commit transactional table,
     operators/txn_table.py — data files are invisible until one atomic
-    manifest rename publishes them, and each micro-batch commits under
-    ``txn_id=batch-<id>`` so a foreachBatch replay is a no-op: the
-    exactly-once upgrade; read back via ``TxnTable(spark, path).read()``)
-    | ``kafka`` | ``noop``.
+    manifest rename publishes them, and each micro-batch of a streaming
+    query commits as the epoch ``(query id, batch id)`` so a foreachBatch
+    replay is a no-op: the exactly-once upgrade. A direct call with a
+    batch id commits under ``txn_id=batch-<id>``, one without under no
+    id. Read back via ``TxnTable(spark, path).read()``) | ``kafka`` |
+    ``noop``.
 
     ``options`` pass straight to the writer. For ``kafka``, the
     ``compression`` shorthand maps to ``kafka.compression.type``
@@ -122,7 +136,7 @@ class Sink:
         staged = isinstance(df, Staged)
         if self.kind == "parquet":
             if staged:
-                fs = HadoopFS(df.spark, self.path_or_topic)
+                fs = df.fs
                 fs.mkdirs(self.path_or_topic)
                 for f in fs.list_files(df.path):
                     dst = f"{self.path_or_topic}/{f.rsplit('/', 1)[1]}"
@@ -144,7 +158,7 @@ class Sink:
             )
             dst = os.path.join(self.path_or_topic, part)
             if staged:
-                fs = HadoopFS(df.spark, dst)
+                fs = df.fs
                 fs.delete(dst, recursive=True)
                 fs.mkdirs(self.path_or_topic)
                 if not fs.rename_no_overwrite(df.path, dst):
@@ -152,15 +166,13 @@ class Sink:
             else:
                 df.write.mode("overwrite").parquet(dst)
         elif self.kind == "txn_table":
-            txn = (
-                f"batch-{batch_id}"
-                if batch_id is not None
-                else f"adhoc-{uuid.uuid4().hex[:12]}"
-            )
             if staged:
-                TxnTable(df.spark, self.path_or_topic).append_dir(df.path, txn_id=txn)
+                table = df.table or TxnTable(df.spark, self.path_or_topic)
+                table.append_dir(df.path, **self._txn(df.spark, batch_id))
             else:
-                TxnTable(df.sparkSession, self.path_or_topic).append(df, txn_id=txn)
+                spark = df.sparkSession
+                table = TxnTable(spark, self.path_or_topic)
+                table.append(df, **self._txn(spark, batch_id))
         elif self.kind == "kafka":  # pragma: no cover - needs a broker
             (
                 df.write.format("kafka")
@@ -173,26 +185,46 @@ class Sink:
         else:
             raise ValueError(f"unknown sink kind {self.kind!r}")
 
-    def has_committed(self, spark: SparkSession, batch_id: int | None) -> bool:
+    def has_committed(
+        self,
+        spark: SparkSession,
+        batch_id: int | None,
+        table: TxnTable | None = None,
+    ) -> bool:
         """Does this sink already hold micro-batch ``batch_id``, so that a
-        replay must not write it again? Only a ``txn_table`` knows; the
+        replay must not write it again? Only a ``txn_table`` knows (asked
+        through ``table``, the query's handle on it, when given); the
         other kinds rewrite (or re-append) on replay."""
-        return (
-            self.kind == "txn_table"
-            and batch_id is not None
-            and f"batch-{batch_id}"
-            in TxnTable(spark, self.path_or_topic).committed_txns()
-        )
+        if self.kind != "txn_table" or batch_id is None:
+            return False
+        table = table or TxnTable(spark, self.path_or_topic)
+        return table.is_committed(**self._txn(spark, batch_id))
+
+    @staticmethod
+    def _txn(spark: SparkSession, batch_id: int | None) -> dict:
+        """The identity a ``txn_table`` commits micro-batch ``batch_id``
+        under: inside a streaming query its ``epoch`` (query id, batch
+        id), so another query's batch of the same id is not taken for a
+        replay; otherwise ``batch-<id>``, or nothing without a batch id
+        (an ad-hoc append that can never be replayed)."""
+        if batch_id is None:
+            return {}
+        query = _query_id(spark)
+        if query is None:
+            return {"txn_id": f"batch-{batch_id}"}
+        return {"epoch": (query, batch_id)}
 
 
 @dataclass(frozen=True)
 class _BatchPlan:
     """What every micro-batch of one query (or one ``run_batch`` call)
     shares: the pipeline, its sinks and route counter, and, on the wire
-    path, each distinct sink with the routes it takes (``dests``) and the
+    path, each distinct sink with the routes it takes (``dests``), the
     ``dest`` column that gives a row's index into ``dests``, NULL for a
-    row no sink takes. ``dests`` is None when one partitioned write cannot
-    serve every sink."""
+    row no sink takes, the sinks' one filesystem (``fs``) and, per
+    destination, the query's ``TxnTable`` handle on a ``txn_table`` sink,
+    else None (``tables``). ``dests`` is None when one partitioned write
+    cannot serve every sink."""
 
     resolved: ResolvedPipeline
     target_sink: Sink
@@ -200,6 +232,8 @@ class _BatchPlan:
     counter: RouteCounter
     dests: list[tuple[Sink, list[str]]] | None = None
     dest: F.Column | None = None
+    fs: HadoopFS | None = None
+    tables: list[TxnTable | None] | None = None
 
 
 class PipelineRunner:
@@ -378,7 +412,8 @@ class PipelineRunner:
             route_labels(resolved.processor_names, resolved.dlq_topics)
         )
         sinks = [target_sink] + [sink for sink, _ in branches]
-        if not self._one_write_serves(spark, sinks):
+        fs = self._one_write_fs(spark, sinks)
+        if fs is None:
             return _BatchPlan(resolved, target_sink, branches, counter)
         # one destination per distinct sink: the part files of different
         # dest directories share names, so two directories must never be
@@ -393,20 +428,24 @@ class PipelineRunner:
         for i, (_, sink_labels) in enumerate(dests):
             hit = route.isin(sink_labels)
             dest = F.when(hit, i) if dest is None else dest.when(hit, i)
+        tables = [
+            TxnTable(spark, sink.path_or_topic) if sink.kind == "txn_table" else None
+            for sink, _ in dests
+        ]
         return _BatchPlan(
-            resolved, target_sink, branches, counter, dests, dest.alias("dest")
+            resolved, target_sink, branches, counter, dests, dest.alias("dest"),
+            fs, tables,
         )
 
-    def _one_write_serves(self, spark: SparkSession, sinks: list[Sink]) -> bool:
-        """Can one partitioned parquet write feed every sink? It needs ok
-        and DLQ rows in one ``(key, value)`` wire schema (a registry),
-        sinks that accept a staged directory, and one filesystem for the
-        renames."""
-        return (
-            self.schemas is not None
-            and all(s.kind in FILE_SINKS for s in sinks)
-            and len({HadoopFS(spark, s.path_or_topic).uri() for s in sinks}) == 1
-        )
+    def _one_write_fs(self, spark: SparkSession, sinks: list[Sink]) -> HadoopFS | None:
+        """The filesystem of every sink when one partitioned parquet write
+        can feed them all, else None. It needs ok and DLQ rows in one
+        ``(key, value)`` wire schema (a registry), sinks that accept a
+        staged directory, and one filesystem for the renames."""
+        if self.schemas is None or any(s.kind not in FILE_SINKS for s in sinks):
+            return None
+        fss = [HadoopFS(spark, s.path_or_topic) for s in sinks]
+        return fss[0] if len({fs.uri() for fs in fss}) == 1 else None
 
     def _planned_frame(self, plan: _BatchPlan, source_df: DataFrame) -> DataFrame:
         """The plan step both run modes share: decode, run the chain and,
@@ -473,29 +512,34 @@ class PipelineRunner:
         pending = [
             i
             for i, (sink, _) in enumerate(plan.dests)
-            if not sink.has_committed(spark, batch_id)
+            if not sink.has_committed(spark, batch_id, plan.tables[i])
         ]
         if not pending:
             return route_counts(planned, plan.counter)
-        staging = "{}/_staging/{}".format(
-            plan.target_sink.path_or_topic.rstrip("/"),
-            f"batch-{batch_id}" if batch_id is not None else f"adhoc-{uuid.uuid4().hex}",
-        )
-        fs = HadoopFS(spark, staging)
+        if batch_id is None:
+            name = f"adhoc-{uuid.uuid4().hex}"
+        else:  # scoped to the query: queries sharing a target reuse batch ids
+            query = _query_id(spark)
+            name = f"batch-{batch_id}" if query is None else f"{query}-batch-{batch_id}"
+        staging = f"{plan.target_sink.path_or_topic.rstrip('/')}/_staging/{name}"
+        fs = plan.fs
         fs.delete(staging, recursive=True)  # left by an attempt that crashed
         observed, counts = plan.counter.observe(planned)
         try:
+            # the publish reads only the dest=<i> directories: no _SUCCESS
             (
                 observed.select("key", "value", plan.dest)
                 .filter(F.col("dest").isin(pending))
                 .write.partitionBy("dest")
+                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
                 .parquet(staging)
             )
             written = set(fs.list_names(staging))
             for i in pending:
                 if f"dest={i}" in written:
-                    sink = plan.dests[i][0]
-                    sink.write_batch(Staged(spark, f"{staging}/dest={i}"), batch_id)
+                    sink, table = plan.dests[i][0], plan.tables[i]
+                    part = Staged(spark, f"{staging}/dest={i}", fs, table)
+                    sink.write_batch(part, batch_id)
             return counts()
         finally:
             fs.delete(staging, recursive=True)

@@ -796,6 +796,61 @@ def test_run_batch_job_count(spark, catalog, tmp_path):
         assert shuffle_reads == [], name
 
 
+def _wire_topic(spark, root, batches):
+    """A file topic of JSON wire messages, one file, so one micro-batch,
+    per list of records in ``batches``."""
+    from pyspark.sql.types import StringType, StructField
+
+    from stream_processor_spark.streaming.file_stream import FileBroker
+
+    topic = FileBroker(str(root)).topic(
+        "topic-in",
+        StructType([StructField("key", StringType()), StructField("value", StringType())]),
+    )
+    for records in batches:
+        rows = [(r["key"], json.dumps(r)) for r in records]
+        topic.produce(spark.createDataFrame(rows, topic.schema).coalesce(1))
+    return topic
+
+
+def _run_wire_query(spark, catalog, topic, tmp_path, ckpt="ckpt", metrics=None):
+    """Run the demo pipeline over ``topic`` to its end, one file per
+    micro-batch, into ``txn_table`` target and DLQ sinks under
+    ``tmp_path``; returns the finished query and the two sinks."""
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, _json_schemas())
+    target = Sink("txn_table", str(tmp_path / "target"))
+    dlq = Sink("txn_table", str(tmp_path / "dlq"))
+    q = runner.run_streaming(
+        1,
+        topic.read_stream(spark, max_files_per_trigger=1),
+        target,
+        {"dlq-capitalize": dlq},
+        checkpoint_dir=str(tmp_path / ckpt),
+        metrics=metrics,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return q, target, dlq
+
+
+def _epochs(table) -> list[dict]:
+    """Each committed version's per-query watermarks, oldest first: one
+    micro-batch commit moves one query's watermark to that batch's id."""
+    return [table.snapshot(v)["watermarks"] for v in range(table.latest_version() + 1)]
+
+
+_K1, _K2, _K3, _K4 = RECORDS
+# three micro-batches with 0, 1 and 2 DLQ rows, and the routes of each
+THREE_BATCHES = [
+    ([_K1, _K2, _K4], {"ok": 2, "dropped": 1}),
+    ([_K3, {"key": "k5", "value": "x", "num": 6}], {"ok": 1, "dlq_capitalize": 1}),
+    (
+        [{"key": "k6", "value": None, "num": 1}, {**_K3, "key": "k7"}, _K2],
+        {"dropped": 1, "dlq_capitalize": 2},
+    ),
+]
+
+
 def test_streaming_plans_once_per_query(spark, catalog, tmp_path, monkeypatch):
     """A wire query decodes and routes its source once, when it starts:
     Spark hands every micro-batch over already planned. Each of three
@@ -803,10 +858,7 @@ def test_streaming_plans_once_per_query(spark, catalog, tmp_path, monkeypatch):
     read under the query's run id, and the metrics equal the per-batch
     sums, so the route counts built once with the plan are fresh on
     every batch."""
-    from pyspark.sql.types import StringType, StructField
-
     from stream_processor_spark.operators.txn_table import TxnTable
-    from stream_processor_spark.streaming.file_stream import FileBroker
 
     calls = {"decode_source": 0, "routed_frame": 0}
     for name in calls:
@@ -817,42 +869,18 @@ def test_streaming_plans_once_per_query(spark, catalog, tmp_path, monkeypatch):
 
         monkeypatch.setattr(PipelineRunner, name, spy)
 
-    k1, k2, k3, k4 = RECORDS
-    batches = [  # with the ok, dropped and dlq rows of each
-        ([k1, k2, k4], {"ok": 2, "dropped": 1}),
-        ([k3, {"key": "k5", "value": "x", "num": 6}], {"ok": 1, "dlq_capitalize": 1}),
-        (
-            [{"key": "k6", "value": None, "num": 1}, {**k3, "key": "k7"}, k2],
-            {"dropped": 1, "dlq_capitalize": 2},
-        ),
-    ]
-    topic = FileBroker(str(tmp_path / "broker")).topic(
-        "topic-in",
-        StructType([StructField("key", StringType()), StructField("value", StringType())]),
-    )
-    for records, _ in batches:  # one file, so one micro-batch, each
-        rows = [(r["key"], json.dumps(r)) for r in records]
-        topic.produce(spark.createDataFrame(rows, topic.schema).coalesce(1))
-    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, _json_schemas())
-    target = Sink("txn_table", str(tmp_path / "target"))
-    dlq = Sink("txn_table", str(tmp_path / "dlq"))
+    batches = THREE_BATCHES
+    topic = _wire_topic(spark, tmp_path / "broker", [r for r, _ in batches])
     metrics = PipelineMetrics("1")
-    q = runner.run_streaming(
-        1,
-        topic.read_stream(spark, max_files_per_trigger=1),
-        target,
-        {"dlq-capitalize": dlq},
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        metrics=metrics,
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
+    q, target, dlq = _run_wire_query(spark, catalog, topic, tmp_path, metrics=metrics)
 
     assert calls == {"decode_source": 1, "routed_frame": 1}
     t, d = TxnTable(spark, target.path_or_topic), TxnTable(spark, dlq.path_or_topic)
-    # a sink commits the batches that hold rows for it
-    assert t.committed_txns() == {"batch-0", "batch-1"}
-    assert d.committed_txns() == {"batch-1", "batch-2"}
+    # a sink commits the batches that hold rows for it, each as the
+    # query's epoch: one version per batch, in order
+    assert _epochs(t) == [{str(q.id): 0}, {str(q.id): 1}]
+    assert _epochs(d) == [{str(q.id): 1}, {str(q.id): 2}]
+    assert t.committed_txns() == d.committed_txns() == set()
     jobs, shuffle_reads = _group_jobs(spark, str(q.runId))
     assert (len(jobs), shuffle_reads) == (len(batches), [])
     assert _decoded(t.read().collect()) == [("k1", 12), ("k4", 18), ("k5", 16)]
@@ -866,6 +894,92 @@ def test_streaming_plans_once_per_query(spark, catalog, tmp_path, monkeypatch):
     assert snap["messages_completed_total"] == total("ok")
     assert snap["messages_dropped_total"] == total("dropped")
     assert snap["messages_dlq_total"] == total("dlq_capitalize")
+
+
+def test_streaming_txn_tables_keep_one_handle_per_query(
+    spark, catalog, tmp_path, monkeypatch
+):
+    """A wire query opens one ``TxnTable`` handle per ``txn_table`` sink,
+    before its first micro-batch, and keeps it: no micro-batch builds a
+    table or a filesystem, each sink's ``_manifests/`` is listed once (by
+    the handle's first replay check) and no manifest is read, since each
+    handle's snapshot is the manifest it committed last."""
+    from stream_processor_spark.operators.txn_table import HadoopFS, TxnTable
+
+    topic = _wire_topic(spark, tmp_path / "broker", [r for r, _ in THREE_BATCHES])
+    events: list[tuple[str, str]] = []
+
+    def spy(owner, name, event):
+        real = getattr(owner, name)
+
+        def recorded(self, *args, **kwargs):
+            events.append(event(self, *args))
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(owner, name, recorded)
+
+    spy(HadoopFS, "__init__", lambda fs, spark, root: ("fs", root))
+    spy(HadoopFS, "list_names", lambda fs, p: ("list", p))
+    spy(HadoopFS, "read_text", lambda fs, p: ("read", p))
+    spy(TxnTable, "__init__", lambda t, spark, root: ("table", root))
+    spy(Sink, "has_committed", lambda sink, *args: ("replay check", sink.path_or_topic))
+    _run_wire_query(spark, catalog, topic, tmp_path)
+    events = list(events)
+
+    roots = [str(tmp_path / "target"), str(tmp_path / "dlq")]
+    checks = [e for e in events if e[0] == "replay check"]
+    assert checks == [("replay check", r) for r in roots] * len(THREE_BATCHES)
+    first_batch = events.index(checks[0])
+    assert [e for e in events if e[0] == "table"] == [("table", r) for r in roots]
+    assert [e for e in events[first_batch:] if e[0] in ("fs", "table")] == []
+    manifests = [f"{r}/_manifests" for r in roots]
+    assert [e for e in events if e[0] == "list" and e[1] in manifests] == [
+        ("list", m) for m in manifests
+    ]
+    assert [e for e in events if e[0] == "read" and "/_manifests/" in e[1]] == []
+
+
+def test_run_batch_into_txn_table_commits_without_txn_id(spark, catalog, tmp_path):
+    """An ad-hoc ``run_batch`` has no batch id, so nothing can replay it:
+    on both write paths its ``txn_table`` commits carry no txn id, and
+    running it twice appends twice."""
+    from stream_processor_spark.operators.txn_table import TxnTable
+
+    for path, schemas in PATHS:
+        runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, schemas)
+        target = Sink("txn_table", str(tmp_path / path / "target"))
+        dlq = Sink("txn_table", str(tmp_path / path / "dlq"))
+        for _ in range(2):
+            df = _demo_df(spark) if schemas is None else _wire_df(spark, RECORDS)
+            runner.run_batch(1, df, target, {"dlq-capitalize": dlq})
+        for sink, rows in ((target, 4), (dlq, 2)):
+            t = TxnTable(spark, sink.path_or_topic)
+            assert t.read().count() == rows, path
+            assert [t.snapshot(v)["txn_id"] for v in range(2)] == [None, None], path
+            assert t.committed_txns() == set(), path
+            assert t.snapshot()["watermarks"] == {}, path
+
+
+def test_new_checkpoint_commits_its_own_batches(spark, catalog, tmp_path):
+    """Two queries on two checkpoints share one pair of ``txn_table``
+    sinks. Both start at micro-batch 0, and the second one's batch 0 is
+    not taken for a replay of the first one's: every row lands once, and
+    each sink keeps a watermark per query."""
+    from stream_processor_spark.operators.txn_table import TxnTable
+
+    k5 = {"key": "k5", "value": "more", "num": 20}
+    q1, target, dlq = _run_wire_query(
+        spark, catalog, _wire_topic(spark, tmp_path / "a", [RECORDS]), tmp_path, "ck1"
+    )
+    q2, _, _ = _run_wire_query(
+        spark, catalog, _wire_topic(spark, tmp_path / "b", [[k5]]), tmp_path, "ck2"
+    )
+    assert q1.id != q2.id
+    t, d = TxnTable(spark, target.path_or_topic), TxnTable(spark, dlq.path_or_topic)
+    assert _decoded(t.read().collect()) == [("k1", 12), ("k4", 18), ("k5", 30)]
+    assert _decoded(d.read().collect()) == [("k3", 4)]
+    assert _epochs(t) == [{str(q1.id): 0}, {str(q1.id): 0, str(q2.id): 0}]
+    assert _epochs(d) == [{str(q1.id): 0}]
 
 
 def test_python_codec_encodes_ok_and_dlq_rows_of_one_batch(spark, catalog, tmp_path):

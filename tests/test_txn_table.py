@@ -5,14 +5,18 @@ The contract under test, end to end:
   leaves the previous snapshot fully intact — no partial reads);
 - commits are atomic renames with no-overwrite semantics, so racing
   writers serialize via optimistic retry;
-- txn_id makes replay a no-op — the foreachBatch retry case commits
-  exactly once;
+- txn_id, or a streaming query's per-query watermark, makes replay a
+  no-op — the foreachBatch retry case commits exactly once;
+- a handle finds the latest version by probing forward, so it sees what
+  other writers committed without listing ``_manifests/`` again;
 - MERGE upsert against the table matches the registered `merge_upsert`
   query's full-outer-COALESCE semantics;
 - the runner's Sink("txn_table") carries all of this into the pipeline.
 """
 
 from __future__ import annotations
+
+import json
 
 import pytest
 
@@ -86,6 +90,54 @@ def test_txn_id_replay_is_noop(spark, tmp_path):
     # replay of an OLD batch after later commits is still a no-op
     assert t.append(df, txn_id="batch-0") is None
     assert t.read().count() == 3
+
+
+def test_epoch_replay_is_noop_per_query(spark, tmp_path):
+    """A streaming epoch (query id, batch id) is committed once its
+    query's watermark reaches the batch id, and only for that query:
+    another query's batch of the same id commits."""
+    t = TxnTable(spark, str(tmp_path / "t"))
+    assert t.append(_df(spark, [(1, "a")]), epoch=("q1", 0)) == 0
+    assert t.append(_df(spark, [(2, "b")]), epoch=("q1", 1)) == 1
+    for replay in (0, 1):
+        assert t.is_committed(epoch=("q1", replay))
+        assert t.append(_df(spark, [(9, "dup")]), epoch=("q1", replay)) is None
+    assert not t.is_committed(epoch=("q2", 0))
+    assert t.append(_df(spark, [(3, "c")]), epoch=("q2", 0)) == 2
+    assert t.snapshot()["watermarks"] == {"q1": 1, "q2": 0}
+    assert t.committed_txns() == set()
+    assert sorted(r.k for r in t.read().collect()) == [1, 2, 3]
+
+
+def test_handle_probes_forward_past_another_writer(spark, tmp_path, monkeypatch):
+    """A second handle commits between two batches of the first: the
+    first handle's next commit lands on v+2, its replay check sees the
+    other handle's commit, and it never lists ``_manifests/`` again."""
+    from stream_processor_spark.operators.txn_table import HadoopFS
+
+    listed: list[str] = []
+    list_names = HadoopFS.list_names
+
+    def spy(fs, p):
+        listed.append(p)
+        return list_names(fs, p)
+
+    monkeypatch.setattr(HadoopFS, "list_names", spy)
+    root = str(tmp_path / "t")
+    mine, other = TxnTable(spark, root), TxnTable(spark, root)
+    assert mine.append(_df(spark, [(1, "mine")]), epoch=("q1", 0)) == 0
+    assert other.append(_df(spark, [(2, "other")]), epoch=("q2", 0)) == 1
+    assert other.append(_df(spark, [(3, "other")]), txn_id="adhoc") == 2
+    assert mine.is_committed(epoch=("q2", 0)) and mine.is_committed("adhoc")
+    assert mine.append(_df(spark, [(4, "mine")]), epoch=("q1", 1)) == 3
+    assert mine.append(_df(spark, [(9, "dup")]), epoch=("q2", 0)) is None
+    assert mine.append(_df(spark, [(9, "dup")]), txn_id="adhoc") is None
+    assert mine.latest_version() == other.latest_version() == 3
+    assert listed == [mine.manifest_dir, other.manifest_dir]
+    assert mine.snapshot() == other.snapshot() == json.loads(
+        mine.fs.read_text(mine._manifest_path(3))
+    )
+    assert sorted(r.k for r in TxnTable(spark, root).read().collect()) == [1, 2, 3, 4]
 
 
 def test_append_dir_moves_files_in_and_replays_once(spark, tmp_path):
@@ -239,10 +291,11 @@ def test_read_empty_table_raises(spark, tmp_path):
 def test_streaming_pipeline_into_txn_table_checkpoint_resume(spark, tmp_path):
     """Full streaming path: run_streaming → foreachBatch →
     Sink('txn_table'), with a checkpointed resume. Batch ids come from
-    the checkpoint, so the second run's new micro-batch commits under a
-    NEW txn id (appends) while never re-committing the first — one
-    manifest version per processed micro-batch, rows exactly once."""
-    from tests.test_pipeline import CATALOG_DOC, RECORDS
+    the checkpoint, so the second run's new micro-batch commits a NEW
+    epoch of the same query (appends) while never re-committing the
+    first — one manifest version per processed micro-batch, rows
+    exactly once."""
+    from tests.test_pipeline import CATALOG_DOC, RECORDS, _epochs
 
     from stream_processor_spark.pipeline.codecs import demo_message_schema
 
@@ -265,6 +318,7 @@ def test_streaming_pipeline_into_txn_table_checkpoint_resume(spark, tmp_path):
         checkpoint_dir=ckpt,
     )
     q.awaitTermination(120)
+    query = str(q.id)
     t = TxnTable(spark, target.path_or_topic)
     assert t.read().count() == 2  # k1, k4
 
@@ -279,8 +333,11 @@ def test_streaming_pipeline_into_txn_table_checkpoint_resume(spark, tmp_path):
     assert sorted(r.out_value for r in rows) == [
         "HELLO_appended", "MORE_appended", "SPARK_appended",
     ]
-    # each processed micro-batch committed exactly one txn
-    assert sorted(t.committed_txns()) == ["batch-0", "batch-1"]
+    # each processed micro-batch committed exactly one epoch, under the
+    # query id the checkpoint keeps across the restart
+    assert str(q.id) == query
+    assert _epochs(t) == [{query: 0}, {query: 1}]
+    assert t.committed_txns() == set()
 
 
 @pytest.mark.slow
@@ -293,7 +350,13 @@ def test_streaming_wire_pipeline_into_txn_table_checkpoint_resume(spark, tmp_pat
 
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from tests.test_pipeline import CATALOG_DOC, RECORDS, _decoded, _json_schemas
+    from tests.test_pipeline import (
+        CATALOG_DOC,
+        RECORDS,
+        _decoded,
+        _epochs,
+        _json_schemas,
+    )
 
     from stream_processor_spark.pipeline.catalog import PipelineCatalog
     from stream_processor_spark.pipeline.processors import BUILTIN_PROCESSORS
@@ -322,12 +385,13 @@ def test_streaming_wire_pipeline_into_txn_table_checkpoint_resume(spark, tmp_pat
         )
         q.awaitTermination(120)
         assert q.exception() is None
+        return str(q.id)
 
-    run(RECORDS)
+    query = run(RECORDS)
     t, d = TxnTable(spark, target.path_or_topic), TxnTable(spark, dlq.path_or_topic)
     assert _decoded(t.read().collect()) == [("k1", 12), ("k4", 18)]
 
-    run([{"key": "k5", "value": "more", "num": 20}])
+    assert run([{"key": "k5", "value": "more", "num": 20}]) == query
     rows = t.read().collect()
     assert sorted(json.loads(r.value)["value"] for r in rows) == [
         "HELLO_appended", "MORE_appended", "SPARK_appended",
@@ -337,8 +401,9 @@ def test_streaming_wire_pipeline_into_txn_table_checkpoint_resume(spark, tmp_pat
     assert [(r.key, json.loads(r.value)) for r in d.read().collect()] == [
         ("k3", {"key": "k3", "num": 4})
     ]
-    assert sorted(t.committed_txns()) == ["batch-0", "batch-1"]
-    assert d.committed_txns() == {"batch-0"}
+    assert _epochs(t) == [{query: 0}, {query: 1}]
+    assert _epochs(d) == [{query: 0}]
+    assert t.committed_txns() == d.committed_txns() == set()
 
 
 def test_vacuum_grace_protects_live_writer(spark, tmp_path):
