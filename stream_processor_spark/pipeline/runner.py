@@ -70,23 +70,18 @@ from stream_processor_spark.pipeline.processors import ProcessorRegistry
 FILE_SINKS = ("parquet", "parquet_idempotent", "txn_table")
 
 
-def _query_id(spark: SparkSession) -> str | None:
-    """The id of the streaming query whose micro-batch this thread runs,
-    None outside one. It stays the same when a query restarts from its
-    checkpoint and is new for a new checkpoint."""
-    return spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-
-
 @dataclass(frozen=True)
 class Staged:
     """One sink's share of a routed write, already on disk: a directory
     of parquet files on the sink's filesystem, reached through ``fs``.
-    ``table`` is the query's handle on a ``txn_table`` sink."""
+    ``table`` is the query's handle on a ``txn_table`` sink, None for the
+    other kinds, and ``query`` the id of the streaming query whose
+    micro-batch it is, None outside one."""
 
-    spark: SparkSession
     path: str
     fs: HadoopFS
-    table: TxnTable | None = None
+    table: TxnTable | None
+    query: str | None
 
 
 @dataclass
@@ -102,10 +97,10 @@ class Sink:
     operators/txn_table.py — data files are invisible until one atomic
     manifest rename publishes them, and each micro-batch of a streaming
     query commits as the epoch ``(query id, batch id)`` so a foreachBatch
-    replay is a no-op: the exactly-once upgrade. A direct call with a
-    batch id commits under ``txn_id=batch-<id>``, one without under no
-    id. Read back via ``TxnTable(spark, path).read()``) | ``kafka`` |
-    ``noop``.
+    replay is a no-op: the exactly-once upgrade. A call with a batch id
+    and no query commits under ``txn_id=batch-<id>``, one without a batch
+    id under no id. Read back via ``TxnTable(spark, path).read()``) |
+    ``kafka`` | ``noop``.
 
     ``options`` pass straight to the writer. For ``kafka``, the
     ``compression`` shorthand maps to ``kafka.compression.type``
@@ -116,7 +111,10 @@ class Sink:
     file kinds, a :class:`Staged` directory, which it publishes without
     moving data twice: ``parquet`` moves the part files into the root,
     ``parquet_idempotent`` renames the directory to ``batch_id=<id>``
-    and ``txn_table`` renames it under ``data/`` and commits it.
+    and ``txn_table`` renames it under ``data/`` and commits it through
+    the directory's table handle. The streaming query a micro-batch
+    belongs to comes with a DataFrame as ``query`` and with a Staged
+    directory as its ``query`` field.
     """
 
     kind: str
@@ -131,7 +129,10 @@ class Sink:
             }
 
     def write_batch(
-        self, df: DataFrame | Staged, batch_id: int | None = None
+        self,
+        df: DataFrame | Staged,
+        batch_id: int | None = None,
+        query: str | None = None,
     ) -> None:
         staged = isinstance(df, Staged)
         if self.kind == "parquet":
@@ -167,12 +168,10 @@ class Sink:
                 df.write.mode("overwrite").parquet(dst)
         elif self.kind == "txn_table":
             if staged:
-                table = df.table or TxnTable(df.spark, self.path_or_topic)
-                table.append_dir(df.path, **self._txn(df.spark, batch_id))
+                df.table.append_dir(df.path, **self._txn(batch_id, df.query))
             else:
-                spark = df.sparkSession
-                table = TxnTable(spark, self.path_or_topic)
-                table.append(df, **self._txn(spark, batch_id))
+                table = TxnTable(df.sparkSession, self.path_or_topic)
+                table.append(df, **self._txn(batch_id, query))
         elif self.kind == "kafka":  # pragma: no cover - needs a broker
             (
                 df.write.format("kafka")
@@ -186,30 +185,24 @@ class Sink:
             raise ValueError(f"unknown sink kind {self.kind!r}")
 
     def has_committed(
-        self,
-        spark: SparkSession,
-        batch_id: int | None,
-        table: TxnTable | None = None,
+        self, table: TxnTable | None, batch_id: int | None, query: str | None
     ) -> bool:
-        """Does this sink already hold micro-batch ``batch_id``, so that a
-        replay must not write it again? Only a ``txn_table`` knows (asked
-        through ``table``, the query's handle on it, when given); the
-        other kinds rewrite (or re-append) on replay."""
-        if self.kind != "txn_table" or batch_id is None:
-            return False
-        table = table or TxnTable(spark, self.path_or_topic)
-        return table.is_committed(**self._txn(spark, batch_id))
+        """Does this sink already hold micro-batch ``batch_id`` of
+        ``query``, so that a replay must not write it again? Only a
+        ``txn_table`` knows, through ``table``, the query's handle on it;
+        the other kinds have no handle and rewrite (or re-append) on
+        replay."""
+        return table is not None and table.is_committed(**self._txn(batch_id, query))
 
     @staticmethod
-    def _txn(spark: SparkSession, batch_id: int | None) -> dict:
+    def _txn(batch_id: int | None, query: str | None) -> dict:
         """The identity a ``txn_table`` commits micro-batch ``batch_id``
-        under: inside a streaming query its ``epoch`` (query id, batch
-        id), so another query's batch of the same id is not taken for a
-        replay; otherwise ``batch-<id>``, or nothing without a batch id
-        (an ad-hoc append that can never be replayed)."""
+        under: in a streaming query its ``epoch`` (query id, batch id), so
+        another query's batch of the same id is not taken for a replay;
+        otherwise ``batch-<id>``, or nothing without a batch id (an ad-hoc
+        append that can never be replayed)."""
         if batch_id is None:
             return {}
-        query = _query_id(spark)
         if query is None:
             return {"txn_id": f"batch-{batch_id}"}
         return {"epoch": (query, batch_id)}
@@ -487,18 +480,25 @@ class PipelineRunner:
         planned: DataFrame,
         metrics: PipelineMetrics | None,
         batch_id: int | None = None,
+        query: str | None = None,
     ) -> dict[str, int]:
-        """Write one batch of the planned frame; returns its route counts."""
+        """Write one batch of the planned frame, micro-batch ``batch_id``
+        of the streaming query ``query`` when there is one; returns its
+        route counts."""
         if plan.dests is not None:
-            counts = self._write_staged(plan, planned, batch_id)
+            counts = self._write_staged(plan, planned, batch_id, query)
         else:
-            counts = self._write_branches(plan, planned, batch_id)
+            counts = self._write_branches(plan, planned, batch_id, query)
         if metrics is not None:
             metrics.record_batch(counts, plan.resolved.processor_names)
         return counts
 
     def _write_staged(
-        self, plan: _BatchPlan, planned: DataFrame, batch_id: int | None
+        self,
+        plan: _BatchPlan,
+        planned: DataFrame,
+        batch_id: int | None,
+        query: str | None,
     ) -> dict[str, int]:
         """The batch as one job: count every route, write the wire rows
         once partitioned by destination, then publish each destination's
@@ -508,18 +508,16 @@ class PipelineRunner:
         this batch gets no rows, and when no sink needs the batch the
         routes are counted with a ``noop`` write instead, so the
         observation never waits on a job that did not run."""
-        spark = planned.sparkSession
         pending = [
             i
             for i, (sink, _) in enumerate(plan.dests)
-            if not sink.has_committed(spark, batch_id, plan.tables[i])
+            if not sink.has_committed(plan.tables[i], batch_id, query)
         ]
         if not pending:
             return route_counts(planned, plan.counter)
         if batch_id is None:
             name = f"adhoc-{uuid.uuid4().hex}"
         else:  # scoped to the query: queries sharing a target reuse batch ids
-            query = _query_id(spark)
             name = f"batch-{batch_id}" if query is None else f"{query}-batch-{batch_id}"
         staging = f"{plan.target_sink.path_or_topic.rstrip('/')}/_staging/{name}"
         fs = plan.fs
@@ -538,14 +536,18 @@ class PipelineRunner:
             for i in pending:
                 if f"dest={i}" in written:
                     sink, table = plan.dests[i][0], plan.tables[i]
-                    part = Staged(spark, f"{staging}/dest={i}", fs, table)
+                    part = Staged(f"{staging}/dest={i}", fs, table, query)
                     sink.write_batch(part, batch_id)
             return counts()
         finally:
             fs.delete(staging, recursive=True)
 
     def _write_branches(
-        self, plan: _BatchPlan, routed: DataFrame, batch_id: int | None
+        self,
+        plan: _BatchPlan,
+        routed: DataFrame,
+        batch_id: int | None,
+        query: str | None,
     ) -> dict[str, int]:
         """The batch as one job to fill its cache and count its routes,
         then one write per non-empty branch over the cached frame."""
@@ -554,7 +556,7 @@ class PipelineRunner:
             counts = route_counts(routed, plan.counter)
             ok = routed.filter(F.col("route") == ROUTE_OK)
             plan.target_sink.write_batch(
-                self.encode_output(plan.resolved, ok), batch_id
+                self.encode_output(plan.resolved, ok), batch_id, query
             )
             # ORIGINAL record payload: input columns only (consumer.js:100),
             # wire-encoded with the outgoing schema (consumer.js:128-132)
@@ -568,7 +570,9 @@ class PipelineRunner:
                 originals = routed.filter(
                     F.col("route").isin(sink_labels)
                 ).select(*original_cols)
-                sink.write_batch(self.encode_dlq(plan.resolved, originals), batch_id)
+                sink.write_batch(
+                    self.encode_dlq(plan.resolved, originals), batch_id, query
+                )
             return counts
         finally:
             routed.unpersist()
@@ -601,7 +605,19 @@ class PipelineRunner:
         )
 
         def process_batch(planned: DataFrame, batch_id: int) -> None:
-            self._write_planned(plan, planned, metrics, batch_id=batch_id)
+            # the query's identity, decided here once per micro-batch: it
+            # stays the same when the query restarts from its checkpoint
+            # and is new for a new checkpoint. Without it a txn_table would
+            # take another query's batch of the same id for a replay.
+            query = planned.sparkSession.sparkContext.getLocalProperty(
+                "sql.streaming.queryId"
+            )
+            if query is None:
+                raise RuntimeError(
+                    "foreachBatch cannot see sql.streaming.queryId; py4j must "
+                    "pin Python threads to JVM threads (PYSPARK_PIN_THREAD)"
+                )
+            self._write_planned(plan, planned, metrics, batch_id, query)
 
         writer = self._planned_frame(plan, stream_df).writeStream.foreachBatch(
             process_batch

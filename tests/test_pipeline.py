@@ -982,6 +982,35 @@ def test_new_checkpoint_commits_its_own_batches(spark, catalog, tmp_path):
     assert _epochs(d) == [{str(q1.id): 0}]
 
 
+def test_streaming_without_query_id_fails_before_writing(
+    spark, catalog, tmp_path, monkeypatch
+):
+    """A micro-batch that cannot see its query's id stops the query
+    instead of committing under the bare batch id, which another query's
+    batch of the same id would be taken for."""
+    from pyspark import SparkContext
+
+    real = SparkContext.getLocalProperty
+    monkeypatch.setattr(
+        SparkContext,
+        "getLocalProperty",
+        lambda sc, key: None if key == "sql.streaming.queryId" else real(sc, key),
+    )
+    runner = PipelineRunner(catalog, BUILTIN_PROCESSORS, _json_schemas())
+    target = Sink("txn_table", str(tmp_path / "target"))
+    q = runner.run_streaming(
+        1,
+        _wire_topic(spark, tmp_path / "broker", [RECORDS]).read_stream(spark),
+        target,
+        {"dlq-capitalize": Sink("txn_table", str(tmp_path / "dlq"))},
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(Exception, match="sql.streaming.queryId"):
+        q.awaitTermination(120)
+    assert not (tmp_path / "target" / "_manifests").exists()
+    assert not (tmp_path / "dlq" / "_manifests").exists()
+
+
 def test_python_codec_encodes_ok_and_dlq_rows_of_one_batch(spark, catalog, tmp_path):
     """An ok row and DLQ rows with and without a null ``num`` share one
     Arrow batch of the one-write path: every payload is written and
