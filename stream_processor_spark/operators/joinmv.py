@@ -311,11 +311,15 @@ def stream_join_mv_updates_txn(
     committed to a TxnTable at ``table_root`` — the runner's
     ``Sink("txn_table")`` exactly-once discipline applied to the IVM
     output stream (each micro-batch is one manifest commit; foreachBatch
-    retries replay-skip on the fingerprint txn_id)."""
+    retries replay-skip on the fingerprint txn_id). The query keeps one
+    ``TxnTable`` handle from its first micro-batch to its last, so a
+    batch probes forward from the version it committed last instead of
+    listing ``_manifests/`` and reading the latest manifest again."""
     from stream_processor_spark.operators.txn_table import TxnTable
 
+    table = TxnTable(spark, table_root)
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        table = TxnTable(batch_df.sparkSession, table_root)
         append_with_txn_sink(spark, names, table, batch_df, "L")
 
     return (

@@ -532,13 +532,14 @@ class PipelineRunner:
                 .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
                 .parquet(staging)
             )
-            written = set(fs.list_names(staging))
+            routes = counts()
             for i in pending:
-                if f"dest={i}" in written:
-                    sink, table = plan.dests[i][0], plan.tables[i]
-                    part = Staged(f"{staging}/dest={i}", fs, table, query)
+                # dest=<i> was written exactly when one of its routes has rows
+                sink, sink_labels = plan.dests[i]
+                if any(label in routes for label in sink_labels):
+                    part = Staged(f"{staging}/dest={i}", fs, plan.tables[i], query)
                     sink.write_batch(part, batch_id)
-            return counts()
+            return routes
         finally:
             fs.delete(staging, recursive=True)
 

@@ -13,6 +13,9 @@ harmless (or helpful) locally:
   host timezone (oracle parity, reproducible window boundaries).
 - 128 MiB file split size: right-sizes parquet scan tasks so a 100 TB scan
   yields ~800k tasks, not 100M.
+- Streaming checkpoint logs commit by ``FileSystem.rename``, which
+  refuses to overwrite on the local FS and HDFS (see
+  ``_CHECKPOINT_FILE_MANAGER``).
 """
 
 from __future__ import annotations
@@ -20,6 +23,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Streaming checkpoint logs (source log, offsets WAL, commit log) and
+# state-store files commit through FileSystem.rename, which refuses to
+# overwrite on the local FS and HDFS: the same primitive TxnTable commits
+# with (HadoopFS.rename_no_overwrite). Spark's default FileContext-based
+# manager resolves links during its rename; on a local filesystem
+# without libhadoop that starts 8 `readlink` processes per log file.
+# Measured on a 4-core host, 40 micro-batches of 5k JSON wire messages
+# into two txn_table sinks (median of 5 runs of the second-half
+# medians): processes started per batch 45 -> 21 (no `readlink` left),
+# walCommit, commitOffsets and latestOffset ~63 -> ~16 ms each,
+# triggerExecution 605 -> 491 ms. (The class moved to the
+# `checkpointing` package in Spark 4.1.)
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 # Defaults applied at session build time (static confs).
 _BUILD_CONFS: dict[str, str] = {
@@ -57,6 +77,7 @@ _BUILD_CONFS: dict[str, str] = {
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",
 }
@@ -79,6 +100,7 @@ _RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
 }
 
 

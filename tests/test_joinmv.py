@@ -270,3 +270,63 @@ def test_streaming_txn_sink_end_to_end_and_restart(spark, sf_dir, tmp_path):
     q2.awaitTermination(120)
     assert table.latest_version() == v  # nothing re-committed
     assert _sorted_rows(TxnTable(spark, root).read()) == expect
+
+
+@pytest.mark.slow
+def test_streaming_txn_sink_keeps_one_handle_per_query(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """`stream_join_mv_updates_txn` builds its ``TxnTable`` handle once,
+    before the query starts, and commits every micro-batch through it:
+    no batch builds a table, ``_manifests/`` is listed once and no
+    manifest is read back."""
+    from stream_processor_spark.operators.txn_table import HadoopFS, TxnTable
+
+    t = Tables(spark, sf_dir)
+    names = _fresh(spark, sf_dir)
+    joinmv.append_right(spark, names, t.customer)
+    root = str(tmp_path / "mv_txn_stream")
+    src = str(tmp_path / "src")
+    # three files == three micro-batches (maxFilesPerTrigger=1)
+    for i in range(3):
+        t.orders.filter(F.col("o_orderkey") % 3 == i).coalesce(1).write.parquet(
+            src, mode="append"
+        )
+    stream = (
+        spark.readStream.schema(t.orders.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+    events: list[tuple[str, str]] = []
+
+    def spy(owner, name, event):
+        real = getattr(owner, name)
+
+        def recorded(self, *args, **kwargs):
+            events.append(event(*args, **kwargs))
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(owner, name, recorded)
+
+    spy(TxnTable, "__init__", lambda spark, root: ("table", root))
+    spy(TxnTable, "append", lambda df, **kw: ("append", kw["txn_id"]))
+    spy(HadoopFS, "list_names", lambda p: ("list", p))
+    spy(HadoopFS, "read_text", lambda p: ("read", p))
+    q = joinmv.stream_join_mv_updates_txn(
+        spark, stream, names, root, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    monkeypatch.undo()
+
+    appends = [e for e in events if e[0] == "append"]
+    assert len(appends) == 3
+    assert [e for e in events if e[0] == "table"] == [("table", root)]
+    assert events.index(("table", root)) < events.index(appends[0])
+    assert [e for e in events if e[0] == "list"] == [("list", f"{root}/_manifests")]
+    assert [e for e in events if e[0] == "read" and "/_manifests/" in e[1]] == []
+    table = TxnTable(spark, root)
+    assert table.latest_version() == 2
+    assert table.committed_txns() == {txn_id for _, txn_id in appends}
+    assert _sorted_rows(table.read()) == _sorted_rows(_full_join(t))

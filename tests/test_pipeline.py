@@ -1011,6 +1011,35 @@ def test_streaming_without_query_id_fails_before_writing(
     assert not (tmp_path / "dlq" / "_manifests").exists()
 
 
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_streaming_checkpoint_logs_commit_by_filesystem_rename(
+    spark, catalog, tmp_path
+):
+    """A streaming query's offsets and commit logs are written through
+    the FileSystem-based checkpoint manager, which commits with
+    ``FileSystem.rename`` (no overwrite), as ``TxnTable`` does; and
+    ``tune_session`` sets that manager on a session whose conf lacks it."""
+    from stream_processor_spark.session import tune_session
+
+    topic = _wire_topic(spark, tmp_path / "broker", [RECORDS])
+    q, _, _ = _run_wire_query(spark, catalog, topic, tmp_path)
+    execution = q._jsq.streamingQuery()
+    for log in (execution.offsetLog(), execution.commitLog()):
+        assert log.fileManager().getClass().getName() == FS_CHECKPOINT_MANAGER
+
+    foreign = spark.newSession()
+    foreign.conf.unset(CHECKPOINT_MANAGER_CONF)
+    assert foreign.conf.get(CHECKPOINT_MANAGER_CONF, None) is None
+    tune_session(foreign)
+    assert foreign.conf.get(CHECKPOINT_MANAGER_CONF) == FS_CHECKPOINT_MANAGER
+
+
 def test_python_codec_encodes_ok_and_dlq_rows_of_one_batch(spark, catalog, tmp_path):
     """An ok row and DLQ rows with and without a null ``num`` share one
     Arrow batch of the one-write path: every payload is written and

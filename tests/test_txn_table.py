@@ -406,6 +406,68 @@ def test_streaming_wire_pipeline_into_txn_table_checkpoint_resume(spark, tmp_pat
     assert t.committed_txns() == d.committed_txns() == set()
 
 
+@pytest.mark.slow
+def test_wire_query_resumes_a_checkpoint_written_by_the_filecontext_manager(
+    spark, tmp_path
+):
+    """Upgrade: a checkpoint written by Spark's FileContext-based manager
+    resumes under the engine's FileSystem-based default. The restarted
+    query keeps its id and continues the batch ids, and every row lands
+    in its sink exactly once."""
+    from tests.test_pipeline import (
+        CATALOG_DOC,
+        CHECKPOINT_MANAGER_CONF,
+        FS_CHECKPOINT_MANAGER,
+        THREE_BATCHES,
+        _decoded,
+        _epochs,
+        _run_wire_query,
+        _wire_topic,
+    )
+
+    from stream_processor_spark.pipeline.catalog import PipelineCatalog
+
+    catalog = PipelineCatalog.from_dict(CATALOG_DOC)
+    batches = [records for records, _ in THREE_BATCHES]
+    broker = tmp_path / "broker"
+
+    def managers(q) -> set[str]:
+        execution = q._jsq.streamingQuery()
+        return {
+            log.fileManager().getClass().getSimpleName()
+            for log in (execution.offsetLog(), execution.commitLog())
+        }
+
+    assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == FS_CHECKPOINT_MANAGER
+    spark.conf.set(
+        CHECKPOINT_MANAGER_CONF,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        q1, target, dlq = _run_wire_query(
+            spark, catalog, _wire_topic(spark, broker, batches[:2]), tmp_path
+        )
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)
+    assert managers(q1) == {"FileContextBasedCheckpointFileManager"}
+
+    q2, _, _ = _run_wire_query(
+        spark, catalog, _wire_topic(spark, broker, batches[2:]), tmp_path
+    )
+    assert managers(q2) == {"FileSystemBasedCheckpointFileManager"}
+    assert q2.id == q1.id
+    assert q2.lastProgress["batchId"] == 2
+    assert sorted(p.name for p in (tmp_path / "ckpt" / "commits").iterdir()
+                  if not p.name.startswith(".")) == ["0", "1", "2"]
+    query = str(q1.id)
+    t, d = TxnTable(spark, target.path_or_topic), TxnTable(spark, dlq.path_or_topic)
+    assert _decoded(t.read().collect()) == [("k1", 12), ("k4", 18), ("k5", 16)]
+    assert sorted(r.key for r in d.read().collect()) == ["k3", "k6", "k7"]
+    assert _epochs(t) == [{query: 0}, {query: 1}]
+    assert _epochs(d) == [{query: 1}, {query: 2}]
+
+
 def test_vacuum_grace_protects_live_writer(spark, tmp_path):
     """Round-7 hardening: a writer in the window between staging its
     data / writing its temp manifest and the commit rename must survive
